@@ -19,6 +19,20 @@ import org.apache.spark.sql.functions._
   * touches ~0.1% of a 100 TB table, and untouched-bucket data is never
   * read.
   *
+  * Write design: `updates` is evaluated exactly ONCE per upsert — it
+  * is written, bucketed, to a sibling `<table>_graft_delta` directory,
+  * and everything the upsert needs is read back from that one durable
+  * copy: the touched-bucket set (≤ numBuckets ints, collected to the
+  * driver and applied as a literal partition filter, so the survivor
+  * scan lists and reads only the touched bucket directories), the
+  * anti-join keys and the new rows. A nondeterministic or
+  * re-evaluation-unstable `updates` therefore cannot stage a bucket
+  * whose survivors were never read. The merged buckets are written
+  * clustered by bucket, so each touched bucket becomes one file (more
+  * only past `spark.sql.adaptive.advisoryPartitionSizeInBytes`); an
+  * unclustered write would leave one small file per (task, bucket)
+  * pair for every later upsert to re-read.
+  *
   * Durability design (no ACID table format available, so the commit
   * protocol is explicit): merged buckets are first written COMPLETELY
   * to a staging directory (the live table is only read at that point,
@@ -28,82 +42,120 @@ import org.apache.spark.sql.functions._
   * touched bucket set. A crash at ANY point leaves every pre-upsert
   * row recoverable: the next `upsert`/`read` call rolls an
   * interrupted swap back to the pre-upsert state from the backup +
-  * manifest. This replaces an earlier design that Overwrite-wrote the
-  * live path while holding survivor rows only in a localCheckpoint —
-  * where executor loss mid-write destroyed untouched rows.
+  * manifest, and drops a leftover delta. The delta and staging copies
+  * are files, not `persist`/`localCheckpoint` blocks, so executor loss
+  * mid-write cannot destroy untouched rows.
+  *
+  * Layout contract: the bucket count is fixed at first publish and
+  * recorded in a hidden `_NUM_BUCKETS` marker in the table root
+  * (Spark's file listing skips `_`-prefixed names). An upsert with a
+  * different count is refused: its updated keys would hash to new
+  * buckets while their old rows survived in the old ones. A table
+  * published without the marker adopts the first upserting caller's
+  * count.
   *
   * Concurrency contract: SINGLE WRITER (matching the reference's one
   * batch job per index). Two concurrent upserts to the same path would
-  * race on the staging/backup directories; serialize writers or give
-  * each its own table. Readers are safe at any time — they see either
-  * a bucket's old or new directory, and `read` first rolls back any
-  * interrupted swap.
+  * race on the delta/staging/backup directories; serialize writers or
+  * give each its own table. Readers are safe at any time — they see
+  * either a bucket's old or new directory, and `read` first rolls back
+  * any interrupted swap.
   */
 object KeyedUpsert {
 
   val BucketCol = "_bucket"
+  private val DeltaDir = "_graft_delta"
   private val StageDir = "_graft_stage"
   private val BackupDir = "_graft_backup"
   private val Manifest = "_MANIFEST"
+  private val NumBuckets = "_NUM_BUCKETS"
 
   private def bucketed(df: DataFrame, keyCol: String, numBuckets: Int): DataFrame =
     df.withColumn(BucketCol, pmod(hash(col(keyCol)), lit(numBuckets)))
+
+  /** Write `df` partitioned by bucket, one file per bucket: the
+    * rebalance puts each bucket in one shuffle partition, which AQE
+    * splits only past the advisory partition size (`repartition(col)`
+    * would push a whole bucket through one task at any size). */
+  private def writeClustered(df: DataFrame, dir: Path): Unit =
+    df.hint("rebalance", col(BucketCol))
+      .write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
+      .parquet(dir.toString)
+
+  private def sibling(root: Path, suffix: String): Path =
+    new Path(root.getParent, root.getName + suffix)
 
   private def fsOf(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Upsert `updates` (one row per key) into the keyed table at `path`.
     * Whole-row replace per key, matching the reference's per-person
-    * array replacement semantics.
+    * array replacement semantics. `updates` is evaluated once; an
+    * empty `updates` leaves an existing table unchanged. Throws
+    * IllegalArgumentException if the table was published with a
+    * different `numBuckets`.
     */
   def upsert(spark: SparkSession, path: String, updates: DataFrame,
              keyCol: String, numBuckets: Int = 64): Unit = {
+    require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
     val root = new Path(path)
     val fs = fsOf(spark, path)
     recover(fs, root) // roll back any interrupted previous swap first
-    val news = bucketed(updates, keyCol, numBuckets)
-    val stage = new Path(root.getParent, root.getName + StageDir)
+    val stage = sibling(root, StageDir)
 
     if (!fs.exists(root)) {
       // First write: stage fully, then publish with one rename.
-      news.write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
-        .parquet(stage.toString)
+      writeClustered(bucketed(updates, keyCol, numBuckets), stage)
+      writeText(fs, new Path(stage, NumBuckets), numBuckets.toString)
       if (!fs.rename(stage, root))
         throw new java.io.IOException(s"failed to publish $stage -> $root")
       return
     }
+    checkNumBuckets(fs, root, numBuckets)
 
-    // Survivors: rows in touched buckets whose key is NOT updated.
-    // Reads the live table; the live table is not modified until the
-    // staging write below has fully committed.
-    //
-    // The touched-bucket set is collected to the driver — ≤ numBuckets
-    // ints, O(buckets) never O(rows), the same bounded-sketch class as
-    // GlobalOrder's bounds sample — and applied as a LITERAL partition
-    // filter. The previous broadcast-join form relied on dynamic
-    // partition pruning firing against the store scan; when it did not
-    // (plan-dependent), a 0.1% upsert READ the whole table to rewrite
-    // 0.1% of it. A literal In() prunes at the file index
-    // deterministically: the survivor scan now lists and reads ONLY
-    // the touched bucket directories (round-15; plan shows
-    // PartitionFilters: [_bucket IN (...)]).
-    val touched = news.select(BucketCol).distinct()
+    // The one evaluation of `updates`. Unpartitioned: a handful of
+    // files, not one per bucket.
+    val deltaDir = sibling(root, DeltaDir)
+    bucketed(updates, keyCol, numBuckets)
+      .write.mode(SaveMode.Overwrite).parquet(deltaDir.toString)
+    val delta = spark.read.parquet(deltaDir.toString)
+    val touched = delta.select(BucketCol).distinct()
       .collect().map(_.getInt(0)).sorted
-    val survivors = spark.read.parquet(path)
-      .filter(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
-      .join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
-    survivors.unionByName(news)
-      .write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
-      .parquet(stage.toString)
+    if (touched.nonEmpty) {
+      // Survivors: rows in touched buckets whose key is NOT updated.
+      // Reads the live table; the live table is not modified until the
+      // staging write below has fully committed.
+      val survivors = spark.read.parquet(path)
+        .filter(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
+        .join(delta.select(col(keyCol)), Seq(keyCol), "left_anti")
+      writeClustered(survivors.unionByName(delta), stage)
+      swap(fs, root, stage)
+    }
+    fs.delete(deltaDir, true)
+  }
 
-    // Swap staged buckets into the live table. Manifest first, so an
-    // interruption anywhere below is rolled back by recover().
-    val backup = new Path(root.getParent, root.getName + BackupDir)
+  /** Refuse an upsert whose bucket count differs from the table's;
+    * a table without the marker adopts `numBuckets`. */
+  private def checkNumBuckets(fs: FileSystem, root: Path, numBuckets: Int): Unit = {
+    val marker = new Path(root, NumBuckets)
+    if (!fs.exists(marker)) writeText(fs, marker, numBuckets.toString)
+    else {
+      val recorded = readText(fs, marker).trim.toInt
+      if (recorded != numBuckets) throw new IllegalArgumentException(
+        s"$root is laid out in $recorded buckets; upsert asked for " +
+        s"$numBuckets, which would leave updated keys' old rows in place")
+    }
+  }
+
+  /** Swap staged buckets into the live table. Manifest first, so an
+    * interruption anywhere below is rolled back by recover(). */
+  private def swap(fs: FileSystem, root: Path, stage: Path): Unit = {
+    val backup = sibling(root, BackupDir)
     fs.mkdirs(backup)
     val stagedBuckets = fs.listStatus(stage).map(_.getPath)
       .filter(_.getName.startsWith(BucketCol + "="))
-    writeManifest(fs, new Path(backup, Manifest),
-      stagedBuckets.map(_.getName).toIndexedSeq)
+    writeText(fs, new Path(backup, Manifest),
+      stagedBuckets.map(_.getName).mkString("\n"))
     stagedBuckets.foreach { staged =>
       val live = new Path(root, staged.getName)
       if (fs.exists(live) &&
@@ -125,18 +177,18 @@ object KeyedUpsert {
 
   /** Roll back an interrupted swap: restore every manifest-listed
     * bucket from backup (or drop it, if it was newly created by the
-    * interrupted run), then clear staging. The manifest's existence is
-    * the authority: it is written before the first rename and deleted
-    * (single-file, effectively atomic) only at commit, so when it is
-    * present the backup is guaranteed complete for every pre-existing
-    * touched bucket. Idempotent — safe to call any number of times,
-    * including after a crash mid-recovery. */
+    * interrupted run), then clear staging and the delta. The manifest's
+    * existence is the authority: it is written before the first rename
+    * and deleted (single-file, effectively atomic) only at commit, so
+    * when it is present the backup is guaranteed complete for every
+    * pre-existing touched bucket. Idempotent — safe to call any number
+    * of times, including after a crash mid-recovery. */
   private def recover(fs: FileSystem, root: Path): Unit = {
-    val backup = new Path(root.getParent, root.getName + BackupDir)
-    val stage = new Path(root.getParent, root.getName + StageDir)
+    val backup = sibling(root, BackupDir)
+    val stage = sibling(root, StageDir)
     val manifest = new Path(backup, Manifest)
     if (fs.exists(manifest)) {
-      readManifest(fs, manifest).foreach { name =>
+      readText(fs, manifest).split("\n").filter(_.nonEmpty).foreach { name =>
         val live = new Path(root, name)
         val saved = new Path(backup, name)
         if (fs.exists(saved)) {          // pre-existing bucket: restore
@@ -151,17 +203,17 @@ object KeyedUpsert {
         }
       }
     }
-    if (fs.exists(backup)) fs.delete(backup, true)
-    if (fs.exists(stage)) fs.delete(stage, true)
+    Seq(backup, stage, sibling(root, DeltaDir))
+      .foreach(p => if (fs.exists(p)) fs.delete(p, true))
   }
 
-  private def writeManifest(fs: FileSystem, p: Path, names: Seq[String]): Unit = {
+  private def writeText(fs: FileSystem, p: Path, text: String): Unit = {
     val out = fs.create(p, true)
-    try out.write(names.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    try out.write(text.getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
 
-  private def readManifest(fs: FileSystem, p: Path): Seq[String] = {
+  private def readText(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
     try {
       val bytes = new java.io.ByteArrayOutputStream()
@@ -169,7 +221,6 @@ object KeyedUpsert {
       var n = in.read(buf)
       while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
       new String(bytes.toByteArray, StandardCharsets.UTF_8)
-        .split("\n").toSeq.filter(_.nonEmpty)
     } finally in.close()
   }
 

@@ -53,6 +53,128 @@ class UpsertProtocolSpec extends SparkSpec {
       before.updated(3L, "C!"))
   }
 
+  private def fsFor(path: String) = new org.apache.hadoop.fs.Path(path)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** bucket dir name -> names of the parquet files in it */
+  private def bucketFiles(path: String): Map[String, Set[String]] = {
+    import org.apache.hadoop.fs.Path
+    val fs = fsFor(path)
+    fs.listStatus(new Path(path)).map(_.getPath)
+      .filter(_.getName.startsWith(KeyedUpsert.BucketCol + "="))
+      .map(b => b.getName -> fs.listStatus(b).map(_.getPath.getName)
+        .filter(_.endsWith(".parquet")).toSet)
+      .toMap
+  }
+
+  /** the `<table>_graft_*` sibling dirs left beside the table */
+  private def leftovers(path: String): Seq[String] = {
+    import org.apache.hadoop.fs.Path
+    val root = new Path(path)
+    fsFor(path).listStatus(root.getParent).map(_.getPath.getName)
+      .filter(_.startsWith(root.getName + "_graft_")).toSeq
+  }
+
+  private def rows(path: String): Map[Long, String] =
+    KeyedUpsert.read(spark, path).as[(Long, String)].collect().toMap
+
+  test("KeyedUpsert evaluates a nondeterministic updates frame once and loses no survivor") {
+    val path = Files.createTempDirectory("upsert_once").toString + "/t"
+    val n = 200
+    KeyedUpsert.upsert(spark, path,
+      (0 until n).map(k => (k.toLong, "old")).toDF("k", "v"), "k", 64)
+    val before = bucketFiles(path)
+    // each evaluation counts every source row and draws a fresh ~5%
+    // subset, so a second evaluation would both show in the count and
+    // stage buckets the first one never touched
+    val evals = spark.sparkContext.longAccumulator("updates_evals")
+    val pick = udf { (k: Long) =>
+      evals.add(1)
+      java.util.concurrent.ThreadLocalRandom.current().nextDouble() < 0.05
+    }.asNondeterministic()
+    val updates = spark.range(n).toDF("k").filter(pick($"k"))
+      .withColumn("v", lit("new"))
+    KeyedUpsert.upsert(spark, path, updates, "k", 64)
+    assert(evals.value == n)
+    val got = rows(path)
+    assert(got.keySet == (0 until n).map(_.toLong).toSet)
+    assert(KeyedUpsert.read(spark, path).count() == n)
+    val touched = spark.read.parquet(path).filter($"v" === "new")
+      .select(KeyedUpsert.BucketCol).distinct().as[Int].collect().toSet
+    val after = bucketFiles(path)
+    val swapped = after.keySet.filter(b => after(b) != before(b))
+      .map(_.stripPrefix(KeyedUpsert.BucketCol + "=").toInt)
+    assert(swapped == touched)
+  }
+
+  test("KeyedUpsert writes one file per bucket and leaves no staging dirs") {
+    val path = Files.createTempDirectory("upsert_layout").toString + "/t"
+    KeyedUpsert.upsert(spark, path,
+      (0L until 100L).map(k => (k, s"v$k")).toDF("k", "v").repartition(4), "k", 8)
+    val rng = new scala.util.Random(7)
+    var want = (0L until 100L).map(k => k -> s"v$k").toMap
+    (1 to 3).foreach { round =>
+      val ups = Seq.fill(20)(rng.nextInt(150).toLong).distinct
+        .map(k => k -> s"r$round")
+      KeyedUpsert.upsert(spark, path, ups.toDF("k", "v").repartition(4), "k", 8)
+      want ++= ups
+    }
+    assert(rows(path) == want)
+    val files = bucketFiles(path)
+    assert(files.size == 8 && files.values.forall(_.size == 1), files)
+    assert(leftovers(path).isEmpty, leftovers(path))
+  }
+
+  test("KeyedUpsert of an empty updates frame is a no-op") {
+    val path = Files.createTempDirectory("upsert_empty").toString + "/t"
+    KeyedUpsert.upsert(spark, path, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "k", 8)
+    val files = bucketFiles(path)
+    KeyedUpsert.upsert(spark, path, Seq.empty[(Long, String)].toDF("k", "v"), "k", 8)
+    assert(rows(path) == Map(1L -> "a", 2L -> "b"))
+    assert(bucketFiles(path) == files)
+    assert(leftovers(path).isEmpty, leftovers(path))
+  }
+
+  test("KeyedUpsert drops a delta left behind by an interrupted run") {
+    import org.apache.hadoop.fs.Path
+    val dir = Files.createTempDirectory("upsert_delta").toString
+    val path = dir + "/t"
+    KeyedUpsert.upsert(spark, path, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "k", 4)
+    val delta = new Path(dir, "t_graft_delta")
+    def interrupt(): Unit = Seq((2L, "lost"), (5L, "lost")).toDF("k", "v")
+      .withColumn(KeyedUpsert.BucketCol, lit(0))
+      .write.mode("overwrite").parquet(delta.toString)
+    val fs = fsFor(path)
+    interrupt()
+    assert(rows(path) == Map(1L -> "a", 2L -> "b"))
+    assert(!fs.exists(delta))
+    interrupt()
+    KeyedUpsert.upsert(spark, path, Seq((3L, "c")).toDF("k", "v"), "k", 4)
+    assert(rows(path) == Map(1L -> "a", 2L -> "b", 3L -> "c"))
+    assert(leftovers(path).isEmpty, leftovers(path))
+  }
+
+  test("KeyedUpsert refuses a bucket count other than the table's") {
+    import org.apache.hadoop.fs.Path
+    val path = Files.createTempDirectory("upsert_nb").toString + "/t"
+    val fs = fsFor(path)
+    KeyedUpsert.upsert(spark, path, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "k", 8)
+    intercept[IllegalArgumentException] {
+      KeyedUpsert.upsert(spark, path, Seq((2L, "B")).toDF("k", "v"), "k", 4)
+    }
+    assert(rows(path) == Map(1L -> "a", 2L -> "b"))
+    // a table published without the marker adopts the caller's count
+    val marker = new Path(path, "_NUM_BUCKETS")
+    assert(fs.delete(marker, false))
+    KeyedUpsert.upsert(spark, path, Seq((2L, "B")).toDF("k", "v"), "k", 8)
+    assert(fs.exists(marker))
+    intercept[IllegalArgumentException] {
+      KeyedUpsert.upsert(spark, path, Seq((1L, "A")).toDF("k", "v"), "k", 16)
+    }
+    assert(rows(path) == Map(1L -> "a", 2L -> "B"))
+    assert(leftovers(path).isEmpty, leftovers(path))
+  }
+
   val cfg: RetentionConfig = RetentionConfig(asOf = LocalDate.of(2021, 6, 15))
 
   test("Protocol.run writes both phases; re-run over written state is a no-op") {

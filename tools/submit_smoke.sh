@@ -39,4 +39,15 @@ fi
 if ! ls "$SINK"/_bucket=* >/dev/null 2>&1; then
   echo "[submit-smoke] FAIL: sink $SINK has no bucket directories"; exit 1
 fi
+# a committed upsert leaves no delta/staging/backup dir beside the sink
+for d in _graft_delta _graft_stage _graft_backup; do
+  if [ -e "${SINK}${d}" ]; then
+    echo "[submit-smoke] FAIL: ${SINK}${d} left behind"; exit 1
+  fi
+done
+for b in "$SINK"/_bucket=*; do
+  if ! ls "$b"/*.parquet >/dev/null 2>&1; then
+    echo "[submit-smoke] FAIL: bucket $b has no parquet file"; exit 1
+  fi
+done
 echo "[submit-smoke] OK: $N persons in $SINK"
