@@ -111,7 +111,7 @@ object Bench {
     // can verify the knob was honored instead of inferring it from
     // per-query ratios that are latency-floor-bound at small SF.
     val cpusJson =
-      if (cpus.forall(_.isDigit) && cpus.nonEmpty) cpus else "\"" + cpus + "\""
+      if (cpus.forall(_.isDigit) && cpus.nonEmpty) cpus else Json.jstr(cpus)
     val idJson =
       s""","cpus":$cpusJson,"parallelism":${spark.sparkContext.defaultParallelism}"""
     // Incremental-vs-batch replay (skipped under SPARK_GRAFT_ONLY):
@@ -153,14 +153,10 @@ object Bench {
     // errored queries surface IN the JSON (name -> exception class), not
     // just on stderr, so a consumer of the artifact alone sees the run
     // was not clean
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => " "; case c => c.toString
-    } + "\""
     val errJson =
       if (errors.isEmpty) ""
       else ",\"errors\":" + errors.map { case (k, v) =>
-        jstr(k) + ":" + jstr(v.take(120)) }.mkString("{", ",", "}")
+        Json.jstr(k) + ":" + Json.jstr(v.take(120)) }.mkString("{", ",", "}")
     val pbJson =
       if (prebuild.isEmpty) ""
       else ",\"prebuild\":" + prebuild.map { case (k, v) =>

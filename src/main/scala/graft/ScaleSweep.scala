@@ -300,15 +300,6 @@ object ScaleSweep {
     // (cc_path rounds, curation pins) can OOM a later aggregation
     // that would run fine alone (the Bench gcPause lesson, per-query)
     val gcPerQuery = sys.env.get("SPARK_GRAFT_GC_PER_QUERY").contains("1")
-    // SPARK_GRAFT_NO_SCOPE=1: run queries WITHOUT the CheckpointScope
-    // release — the round-14 A/B knob for adjudicating what
-    // deterministic per-query block release costs (pass-2 timings no
-    // longer ride pass-1's leftover checkpoint blocks) vs what it buys
-    // (the single-JVM sf100 sweep). Measurement-only: a long sweep
-    // without scoping re-exposes the round-12 block-pile-up OOM.
-    val noScope = sys.env.get("SPARK_GRAFT_NO_SCOPE").contains("1")
-    def runScoped[T](body: => T): T =
-      if (noScope) body else graft.operators.CheckpointScope.scoped(body)
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
     val times = scala.collection.mutable.LinkedHashMap[String, Double]()
     val cold = scala.collection.mutable.LinkedHashMap[String, Double]()
@@ -340,27 +331,11 @@ object ScaleSweep {
     // must leave its 57 measured rows on disk, not vanish (round-14:
     // the first widened-sweep attempt lost 35 minutes of timings to a
     // GCLocker-starvation OOM with nothing written)
-    // full JSON string escaping — exception messages carry newlines
-    // (AnalysisException plan context), backslashes, and occasionally
-    // other control chars (ESC, \f); one definition serves both the
-    // per-query partial flush and the final write, so the crash-
-    // forensics artifact is exactly as parseable as the clean one
-    // (round-15 ADVICE: the flush's old replaceAll missed controls
-    // below 0x20 other than \n\r\t)
-    def jstr(v: String): String = v.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     def flushPartial(pass: Int): Unit = outJson.foreach { p =>
       val qjson = times.toSeq.sortBy(-_._2)
         .map { case (k, v) => s""""$k":$v""" }.mkString(",")
       val fjson = failures.toSeq
-        .map { case (k, v) => s""""$k":"${jstr(v)}"""" }
+        .map { case (k, v) => s""""$k":${Json.jstr(v)}""" }
         .mkString(",")
       val js = s"""{"metric":"sweep_total","in_progress":true,""" +
         s""""pass":$pass,"sf":"$sfDir","ansi":true,""" +
@@ -389,7 +364,8 @@ object ScaleSweep {
             // the deterministic form of the GC knob above, and the
             // round-13 fix for the accumulated-block OOM that killed
             // the round-12 single-JVM sf100 run
-            val n = runScoped { fn(spark, sfDir).count() }
+            val n = graft.operators.CheckpointScope.scoped {
+              fn(spark, sfDir).count() }
             val sec = math.rint((System.nanoTime() - t0) / 1e6) / 1000
             if (pass == 1) cold(name) = sec
             times(name) = times.get(name).fold(sec)(math.min(_, sec))
@@ -423,7 +399,7 @@ object ScaleSweep {
       val rjson = rows.toSeq.sortBy(_._1)
         .map { case (k, v) => s""""$k":$v""" }.mkString(",")
       val fjson = failures.toSeq
-        .map { case (k, v) => s""""$k":"${jstr(v)}"""" }
+        .map { case (k, v) => s""""$k":${Json.jstr(v)}""" }
         .mkString(",")
       val cjson = cold.toSeq.sortBy(-_._2)
         .map { case (k, v) => s""""$k":$v""" }.mkString(",")
@@ -433,7 +409,7 @@ object ScaleSweep {
       // bootstrap vs delta so delta-proportionality is measured
       val incrNd =
         if (only.isDefined) ""
-        else try "," + runScoped(
+        else try "," + graft.operators.CheckpointScope.scoped(
           Bench.incrementalNeardupReplay(spark, sfDir))
         catch { case e: Throwable =>
           println(s"[sweep] incremental_neardup replay failed: $e"); "" }
@@ -443,7 +419,7 @@ object ScaleSweep {
         else prebuild.map { case (k, v) => s""""$k":$v""" }
           .mkString(""""prebuild":{""", ",", "},")
       val js = s"""{"metric":"sweep_total","value":$total,"unit":"sec",""" +
-        s""""sf":"$sfDir","ansi":true,"scoped":${!noScope},""" +
+        s""""sf":"$sfDir","ansi":true,"scoped":true,""" +
         s"""$pjson"n_queries":${suite.size},""" +
         s""""skipped":[$skipped],""" +
         s""""n_clean":${suite.size - failures.size},"passes":$passes,""" +

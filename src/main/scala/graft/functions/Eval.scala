@@ -73,8 +73,8 @@ object Eval {
     // ppm score, a bounded integer grade) pass `scoreDomainBound` —
     // an upper bound is enough, it only routes the physical plan —
     // and skip the gate pin entirely.
-    graft.operators.GlobalOrder.withRunningSumAuto(
-        byValue, Seq(col("s")), col("n_s"), "__cum",
+    graft.operators.GlobalOrder.withRunningSumsAuto(
+        byValue, Seq(col("s")), Seq(col("n_s") -> "__cum"),
         bound = scoreDomainBound)
       .withColumn("rk", col("__cum") - col("n_s") + 1L)
       .crossJoin(broadcast(total))

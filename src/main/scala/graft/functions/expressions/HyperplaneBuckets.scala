@@ -27,13 +27,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * rows, no exchanges (the SimHash60 precedent).
   *
   * Bit-compatibility contract (spec-pinned against the DataFrame
-  * form): quantization is EXACTLY Spark's `round(x·1000)` —
-  * float→double widen, ×1000 in double, scala BigDecimal HALF_UP —
-  * and plane weight w(p,d) is EXACTLY `md5Hash60("p_d") % 2001 −
-  * 1000` (top 60 bits of md5, nonneg, so % is the positive
-  * remainder). Every dot term |q·w| ≤ ~2²¹ summed over 64 dims —
-  * exact in long; null elements contribute nothing, exactly as SQL
-  * `sum` skipped the null exploded rows. Bucket of band b =
+  * form): quantization is EXACTLY Spark's `round(x·1000)` cast to
+  * long — float→double widen, ×1000 in double, scala BigDecimal
+  * HALF_UP, non-finite values as the non-ANSI cast maps them (NaN →
+  * 0, ±Inf → ±Long bound, products wrapping) — and plane weight
+  * w(p,d) is EXACTLY `md5Hash60("p_d") % 2001 − 1000` (top 60 bits
+  * of md5, nonneg, so % is the positive remainder). Every finite dot
+  * term |q·w| ≤ ~2²¹ summed over 64 dims — exact in long; null
+  * elements contribute nothing, exactly as SQL `sum` skipped the null
+  * exploded rows, and an empty vector yields no bands, as it exploded
+  * to no rows. Bucket of band b =
   * Σ_j bit(b·planes+j) << j, j ∈ [0, planes).
   */
 case class HyperplaneBuckets(child: Expression, planes: Int, bands: Int)
@@ -73,18 +76,25 @@ case class HyperplaneBuckets(child: Expression, planes: Int, bands: Int)
 
   /** Called from generated code too (whole-stage codegen stays intact). */
   def buckets(arr: ArrayData): Array[Long] = {
+    // an empty embedding has no exploded elements, so no bands
+    if (arr.numElements() == 0) return Array.emptyLongArray
     val n = math.min(arr.numElements(), dims)
     // quantize once per row: round(x·1000) with Spark Round's exact
-    // double semantics (scala BigDecimal HALF_UP); null element → a
-    // skipped dimension (mask), matching sum()-skips-nulls
+    // double semantics (scala BigDecimal HALF_UP; NaN and ±Inf pass
+    // through round unchanged and take the cast's 0 / ±Long bound);
+    // null element → a skipped dimension (mask), matching
+    // sum()-skips-nulls
     val q = new Array[Long](n)
     val present = new Array[Boolean](n)
     var d = 0
     while (d < n) {
       if (!arr.isNullAt(d)) {
         val x = if (isFloat) arr.getFloat(d).toDouble else arr.getDouble(d)
-        q(d) = BigDecimal(x * 1000.0)
-          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble.toLong
+        val scaled = x * 1000.0
+        q(d) =
+          if (scaled.isNaN || scaled.isInfinite) scaled.toLong
+          else BigDecimal(scaled).setScale(0, BigDecimal.RoundingMode.HALF_UP)
+            .toDouble.toLong
         present(d) = true
       }
       d += 1

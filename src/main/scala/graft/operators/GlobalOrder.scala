@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,16 +30,13 @@ import org.apache.spark.sql.types._
   *      unpartitioned window is the RIGHT tool) aggregates map-side
   *      from the PRE-shuffle frame and is broadcast back.
   *
-  * The earlier design materialized `repartitionByRange` +
-  * `spark_partition_id()` behind an eager `localCheckpoint`, because
-  * the SQL range exchange re-samples split points per execution and
-  * the two consumers would otherwise disagree on pids. That pin was
-  * the measured sf100 scale-killer (BASELINE round 13: two 150M-row
-  * layouts' pins ≈ 45 GB of block churn, task OOM at the standard
-  * heap). Literal bounds make the pid a pure function of the row, so
-  * NOTHING needs pinning: the only full-width pass over the input is
-  * the window's own shuffle write; the bounds sample and the offset
-  * aggregate are key-column-pruned scans.
+  * A `repartitionByRange` plan must be pinned, because the SQL range
+  * exchange re-samples split points per execution and the two
+  * consumers would disagree on pids; that pin was the measured sf100
+  * scale-killer (BASELINE round 13: ≈ 45 GB of block churn). Literal
+  * bounds make the pid a pure function of the row, so NOTHING needs
+  * pinning: the only full-width pass over the input is the window's
+  * own shuffle write; the sample and the offsets are key-pruned scans.
   *
   * Physical placement: ranges are mapped to shuffle partitions through
   * a driver-computed slot table — for range j a small int v_j with
@@ -50,17 +47,10 @@ import org.apache.spark.sql.types._
   * re-execution). A spec pins the bijection against hash-function
   * drift.
   *
-  * Strategy knob `spark.graft.globalorder.strategy`:
-  *   - `bounds` (default) — the literal-bounds plan above. Requires a
-  *     DETERMINISTIC input (every graft call site is): the input is
-  *     evaluated once full-width (the shuffle) plus twice key-pruned
-  *     (sample, offsets). Scan-rooted, cached, and checkpointed inputs
-  *     re-evaluate for free; anything with a join/aggregate/window in
-  *     its (cache-substituted) plan is pinned ONCE automatically —
-  *     one-shot, released with the owning query — so nested
-  *     numberings and aggregate inputs never re-run per consumer.
-  *   - `checkpoint` — the legacy pinned range-exchange plan, kept for
-  *     A/B measurement and for non-deterministic inputs.
+  * A derived input (join/aggregate/window or a nondeterministic
+  * expression in its cache-substituted plan) is pinned ONCE, one-shot
+  * (see [[reEvalCheap]]). Sort keys the driver-side sample cannot
+  * order (see [[comparable]]) take the pinned range-exchange plan.
   *
   * Semantics notes:
   *   - ties: equal sort keys get equal bisect pids (the comparison is
@@ -189,7 +179,7 @@ object GlobalOrder {
     }
 
   // ------------------------------------------------------------------
-  // Deterministic range assignment (the `bounds` strategy).
+  // Deterministic range assignment.
   // ------------------------------------------------------------------
 
   /** One sort key: the bare key column (direction stripped), its
@@ -209,8 +199,8 @@ object GlobalOrder {
   }
 
   /** Key types the driver-side sample can order (external row values
-    * implement Comparable). Anything else falls back to the
-    * checkpoint strategy rather than guessing an ordering. */
+    * implement Comparable). Anything else falls back to the pinned
+    * range-exchange plan rather than guessing an ordering. */
   private def comparable(dt: DataType): Boolean = dt match {
     case _: NumericType | StringType | BooleanType | DateType |
          TimestampType | TimestampNTZType => true
@@ -354,39 +344,25 @@ object GlobalOrder {
       v
     }
 
-  /** The range-assigned frames one numbering consumes.
-    *
-    * `win`: the shuffled frame the per-range window runs over —
-    * partition the window by [[partCol]] (+ group columns), which the
-    * physical partitioning provably clusters. `agg`: the frame the
-    * P-row offset table aggregates from — PRE-shuffle in bounds mode
-    * (map-side partial aggregation; the full input never moves for the
-    * offsets), the pinned frame itself in checkpoint mode. Both carry
-    * [[PID]], the monotone range id the offsets order and join by. */
+  /** The range-assigned frames one numbering consumes. `win`: the
+    * shuffled frame the per-range window runs over, partitioned by
+    * [[partCol]] (+ group columns). `agg`: the frame the offsets
+    * aggregate from — PRE-shuffle on the literal-bounds path (map-side
+    * partial aggregation), the pinned frame on the range-exchange path.
+    * Both carry [[PID]], the monotone range id offsets order by. */
   private case class Ranged(win: DataFrame, agg: DataFrame, partCol: String)
-
-  private def strategy(spark: org.apache.spark.sql.SparkSession): String =
-    spark.conf.get("spark.graft.globalorder.strategy", "bounds")
 
   /** Whether re-evaluating `df` is no worse than a (column-pruned)
     * scan: its CACHE-SUBSTITUTED plan holds only leaves (parquet
     * relations, checkpointed LogicalRDDs, InMemoryRelations) under
-    * per-row operators. The bounds strategy evaluates its input three
-    * times (key-pruned sample, the window's shuffle feed, the
-    * key-pruned offset aggregate) — free over a scan or a cached
-    * frame, but a join/aggregate/window input would re-run per
-    * consumer, so [[ranged]] pins those once (one-shot, released with
-    * the owning query by [[CheckpointScope]]).
-    *
-    * Also requires every node's expressions DETERMINISTIC: a
-    * re-evaluable plan here is consumed by several jobs (sample,
-    * shuffle feed, offsets — and in the *Auto gate, the count and
-    * then whichever branch runs), and a nondeterministic
-    * Project/Filter (rand(), sample-style predicates) would hand each
-    * consumer a different row set. Those fall back to the persist/pin
-    * path, which snapshots one row set for everyone (round-15 ADVICE;
-    * every current call site is deterministic — this is a guard for
-    * future callers). */
+    * per-row operators, all DETERMINISTIC. The literal-bounds plan
+    * evaluates its input three times (sample, shuffle feed, offsets)
+    * and the `*Auto` gate once more (the count): free over a scan or a
+    * cached frame, but a join/aggregate/window would re-run per
+    * consumer, and a nondeterministic Project/Filter (rand()) would
+    * hand each consumer a different row set. Those inputs are pinned
+    * once instead ([[ranged]] via [[CheckpointScope]], [[gated]] via
+    * its persist), which snapshots one row set for everyone. */
   private def reEvalCheap(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical._
     df.queryExecution.withCachedData.collectFirst {
@@ -403,10 +379,10 @@ object GlobalOrder {
       if (parts > 0) parts
       else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val specs = sortSpecs(df, sortCols)
-    if (strategy(spark) == "checkpoint" || !specs.forall(s => comparable(s.dt))) {
-      // legacy pinned plan: the SQL range exchange re-samples split
-      // points per execution, so the frame must be materialized for
-      // its two consumers to agree on pids
+    if (!specs.forall(s => comparable(s.dt))) {
+      // pinned plan: the SQL range exchange re-samples split points
+      // per execution, so the frame must be materialized for its two
+      // consumers to agree on pids
       val s = LoopCheckpoint(
         df.repartitionByRange(p, sortCols: _*)
           .withColumn(PID, spark_partition_id()))
@@ -423,44 +399,80 @@ object GlobalOrder {
     }
   }
 
-  /** Exclusive prefix of each aggregate per pid: P rows, broadcast
-    * back as `__go_off0..__go_offN-1` (input order) — the ONE
-    * definition of the prefix-offset table every numbering uses. */
-  private def offsets(s: DataFrame, aggCols: Seq[Column]): DataFrame = {
+  // ------------------------------------------------------------------
+  // The numbering core: global and grouped row number / rank / running
+  // sums are one [[distributed]] plan; the global form has no groups.
+  //
+  // Grouping fixes the LOW-CARDINALITY-partition window:
+  // `Window.partitionBy(g).orderBy(k)` parallelizes by GROUP, so 3
+  // return flags move a fact table into 3 tasks, each sorting its group
+  // single-threaded. Range-assigning on (group ++ sort) keeps it P-way
+  // parallel; the offset table is ≤ G·P rows, so it is meant for few
+  // groups (at high G the plain grouped window is already parallel).
+  // ------------------------------------------------------------------
+
+  /** One numbered output column: `fn` is its window function, `lift`
+    * the aggregate whose exclusive per-(group, range) prefix lifts the
+    * per-range value to the global one. */
+  private case class Numbering(out: String, fn: WindowSpec => Column,
+                               lift: Column)
+
+  private def rowNumberFn(w: WindowSpec): Column =
+    row_number().over(w).cast("long")
+  private def rankFn(w: WindowSpec): Column = rank().over(w).cast("long")
+
+  /** The running sums' frame over (groups, sort) — the frame
+    * row_number / rank / ntile resolve to anyway. */
+  private def frame(groups: Seq[Column], sortCols: Seq[Column]): WindowSpec =
+    Window.partitionBy(groups: _*).orderBy(sortCols: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  /** Exclusive per-group prefix of each aggregate, ordered by pid
+    * (≤ G·P rows), as `__go_off0..N-1` — the one offset table. */
+  private def offsets(s: DataFrame, groupCols: Seq[String],
+                      aggCols: Seq[Column]): DataFrame = {
+    val keys = col(PID) +: groupCols.map(col)
     val named = aggCols.zipWithIndex.map { case (a, i) => a.as(s"__go_n$i") }
-    val w = Window.orderBy(PID).rowsBetween(Window.unboundedPreceding, -1)
-    aggCols.indices.foldLeft(
-        s.groupBy(col(PID)).agg(named.head, named.tail: _*)) { (d, i) =>
+    val w = Window.partitionBy(groupCols.map(col): _*).orderBy(PID)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val counted = s.groupBy(keys: _*).agg(named.head, named.tail: _*)
+    aggCols.indices.foldLeft(counted) { (d, i) =>
       d.withColumn(s"__go_off$i",
         coalesce(sum(col(s"__go_n$i")).over(w), lit(0L)))
-    }.select(col(PID) +: aggCols.indices.map(i => col(s"__go_off$i")): _*)
+    }.select(keys ++ aggCols.indices.map(i => col(s"__go_off$i")): _*)
   }
 
-  /** Global `row_number()` over `sortCols` as LongType column `out`.
-    * Deterministic iff the sort is a total order (tiebreak to a key) —
-    * the same contract as the window it replaces. */
+  /** Range-assign on (groups ++ sort), run every window per (range,
+    * group), add its exclusive offset. Equal (group, key) rows share a
+    * range (null-safe-equal bisect), so rank keeps its gaps. */
+  private def distributed(df: DataFrame, groupCols: Seq[String],
+                          sortCols: Seq[Column], nums: Seq[Numbering],
+                          parts: Int): DataFrame = {
+    val r = ranged(df, groupCols.map(col) ++ sortCols, parts)
+    val w = frame(col(r.partCol) +: groupCols.map(col), sortCols)
+    val local = nums.zipWithIndex.foldLeft(r.win) { case (d, (n, i)) =>
+      d.withColumn(s"__go_w$i", n.fn(w)) }
+    val offs = broadcast(offsets(r.agg, groupCols, nums.map(_.lift)))
+    nums.zipWithIndex.foldLeft(local.join(offs, PID +: groupCols)) {
+      case (d, (n, i)) =>
+        d.withColumn(n.out, col(s"__go_off$i") + col(s"__go_w$i"))
+    }.drop(Seq(PID, PLACE) ++ nums.indices.flatMap(i =>
+      Seq(s"__go_w$i", s"__go_off$i")): _*)
+  }
+
+  /** `row_number()` over `sortCols` (per group of `groupCols`) as
+    * LongType `out`; deterministic iff the sort totally orders each
+    * group — the window's own contract. */
   def withRowNumber(df: DataFrame, sortCols: Seq[Column], out: String,
-                    parts: Int = 0): DataFrame = {
-    val r = ranged(df, sortCols, parts)
-    val w = Window.partitionBy(r.partCol).orderBy(sortCols: _*)
-    r.win.withColumn("__go_rn", row_number().over(w).cast("long"))
-      .join(broadcast(offsets(r.agg, Seq(count(lit(1))))), PID)
-      .withColumn(out, col("__go_off0") + col("__go_rn"))
-      .drop(PID, PLACE, "__go_rn", "__go_off0")
-  }
+                    groupCols: Seq[String] = Nil, parts: Int = 0): DataFrame =
+    distributed(df, groupCols, sortCols,
+      Seq(Numbering(out, rowNumberFn, count(lit(1)))), parts)
 
-  /** Global `rank()` (gap semantics) over `sortCols`. Equal keys share
-    * a range (null-safe-equal bisect), so per-range rank plus the
-    * prior ranges' row count is the global rank. */
+  /** `rank()` (gap semantics) over `sortCols` (per group of `groupCols`). */
   def withRank(df: DataFrame, sortCols: Seq[Column], out: String,
-               parts: Int = 0): DataFrame = {
-    val r = ranged(df, sortCols, parts)
-    val w = Window.partitionBy(r.partCol).orderBy(sortCols: _*)
-    r.win.withColumn("__go_rk", rank().over(w).cast("long"))
-      .join(broadcast(offsets(r.agg, Seq(count(lit(1))))), PID)
-      .withColumn(out, col("__go_off0") + col("__go_rk"))
-      .drop(PID, PLACE, "__go_rk", "__go_off0")
-  }
+               groupCols: Seq[String] = Nil, parts: Int = 0): DataFrame =
+    distributed(df, groupCols, sortCols,
+      Seq(Numbering(out, rankFn, count(lit(1)))), parts)
 
   /** Global `ntile(n)` over `sortCols`: SQL NTILE's exact rule from
     * the global row number — base bucket size `total div n`, first
@@ -468,7 +480,7 @@ object GlobalOrder {
   def withNtile(df: DataFrame, n: Int, sortCols: Seq[Column], out: String,
                 parts: Int = 0): DataFrame = {
     require(n > 0, s"ntile bucket count must be positive, got $n")
-    val numbered = withRowNumber(df, sortCols, "__go_grn", parts)
+    val numbered = withRowNumber(df, sortCols, "__go_grn", parts = parts)
     // total row count re-aggregates the INPUT (scan + count, no sort)
     // rather than re-evaluating the numbered plan a second time
     val total = df.agg(count(lit(1)).as("__go_total"))
@@ -485,262 +497,99 @@ object GlobalOrder {
       .drop("__go_grn", "__go_total")
   }
 
-  /** Global running sum of `valueCol` over `sortCols`
-    * (`rowsBetween(unboundedPreceding, currentRow)`): per-partition
-    * running sum plus the prior partitions' value total. The window's
-    * LongType overflow semantics are preserved (offsets sum in
-    * BIGINT); widen `valueCol` upstream if the total needs it. */
-  def withRunningSum(df: DataFrame, sortCols: Seq[Column], valueCol: Column,
-                     out: String, parts: Int = 0): DataFrame =
-    withRunningSums(df, sortCols, Seq((valueCol, out)), parts)
-
-  /** Several global running sums over ONE sort order in ONE ranged
-    * pass — chaining [[withRunningSum]] would re-pay the range
-    * shuffle once PER SUM over the identical key (the q_ks_test
-    * shape: cumulative F and O counts over the same pooled support).
-    * One per-partition window computes every prefix; one P-row offset
-    * table carries every column's exclusive total. */
+  /** Running sums of each `(valueCol, out)` over `sortCols` (per group
+    * of `groupCols`) in ONE range shuffle however many sums share the
+    * order (the q_ks_test shape). LongType overflow semantics are the
+    * window's (offsets sum in BIGINT); widen a value upstream if its
+    * total needs it. */
   def withRunningSums(df: DataFrame, sortCols: Seq[Column],
                       sums: Seq[(Column, String)],
+                      groupCols: Seq[String] = Nil,
                       parts: Int = 0): DataFrame = {
-    require(sums.nonEmpty, "need at least one (valueCol, out) sum")
-    require(sums.map(_._2).distinct.size == sums.size,
-      s"duplicate output names in sums: ${sums.map(_._2).mkString(", ")} — " +
+    checkSums(df, sums)
+    // each value is projected once ahead of the range assignment; the
+    // window and the offset aggregate both read that column
+    val vs = sums.indices.map(i => s"__go_v$i")
+    val nums = sums.zip(vs).map { case ((_, o), v) =>
+      Numbering(o, sum(col(v)).over(_), sum(col(v))) }
+    val valued = df.select(col("*") +: sums.zip(vs).map {
+      case ((c, _), v) => c.as(v) }: _*)
+    distributed(valued, groupCols, sortCols, nums, parts).drop(vs: _*)
+  }
+
+  private def checkSums(df: DataFrame, sums: Seq[(Column, String)]): Unit = {
+    val outs = sums.map(_._2)
+    require(outs.nonEmpty, "need at least one (valueCol, out) sum")
+    require(outs.distinct.size == outs.size,
+      s"duplicate output names in sums: ${outs.mkString(", ")} — " +
         "the withColumn fold would silently clobber the earlier sum")
-    sums.map(_._2).find(df.columns.contains).foreach { o =>
-      throw new IllegalArgumentException(
-        s"running-sum output name '$o' already exists in the input — " +
-          "it would silently replace the input column; rename one")
-    }
-    val vcols = sums.zipWithIndex.map { case ((v, _), i) => v.as(s"__go_v$i") }
-    val r = ranged(df.select(col("*") +: vcols: _*), sortCols, parts)
-    val w = Window.partitionBy(r.partCol).orderBy(sortCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offs = offsets(r.agg, sums.indices.map(i => sum(col(s"__go_v$i"))))
-    val prefixed = sums.indices.foldLeft(r.win) { (d, i) =>
-      d.withColumn(s"__go_ps$i", sum(col(s"__go_v$i")).over(w))
-    }
-    val out = sums.zipWithIndex.foldLeft(
-        prefixed.join(broadcast(offs), PID)) { case (d, ((_, o), i)) =>
-      d.withColumn(o, col(s"__go_off$i") + col(s"__go_ps$i"))
-    }
-    out.drop(Seq(PID, PLACE) ++ sums.indices.flatMap(i =>
-      Seq(s"__go_v$i", s"__go_ps$i", s"__go_off$i")): _*)
+    val clash = outs.filter(df.columns.contains)
+    require(clash.isEmpty,
+      s"running-sum output names already in the input: ${clash.mkString(", ")}" +
+        " — they would silently replace the input columns; rename them")
   }
 
   // ------------------------------------------------------------------
-  // Grouped variants — the LOW-CARDINALITY-partition window fix.
-  //
-  // `Window.partitionBy(g).orderBy(k)` parallelizes by GROUP: with 3
-  // return flags or 5 order priorities over a fact table, the whole
-  // relation moves into 3-5 tasks, each holding and sorting its
-  // group single-threaded — the same non-finishing shape at 100 TB
-  // as the unpartitioned window, one level down. These compute the
-  // identical grouped numbering by range-assigning on
-  // (group ++ sort) — P-way parallel regardless of group count —
-  // with per-(group, range) prefix offsets broadcast back. The
-  // offset table is ≤ G·P rows: intended for low-cardinality groups
-  // (at high G the plain grouped window is already parallel and is
-  // the right tool).
-  // ------------------------------------------------------------------
-
-  /** Exclusive per-group prefix of `agg` ordered by pid: ≤ G·P rows. */
-  private def groupedOffsets(s: DataFrame, groupCols: Seq[String],
-                             aggCol: Column): DataFrame = {
-    s.groupBy(col(PID) +: groupCols.map(col): _*).agg(aggCol.as("__go_n"))
-      .withColumn("__go_off",
-        coalesce(sum("__go_n").over(
-          Window.partitionBy(groupCols.map(col): _*).orderBy(PID)
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col(PID) +: groupCols.map(col) :+ col("__go_off"): _*)
-  }
-
-  /** `rank().over(Window.partitionBy(groupCols).orderBy(sortCols))`
-    * without the per-group task collapse. Equal (group, key) rows
-    * share a range, so per-range rank plus the group's prior-range
-    * row count is the global grouped rank (gap semantics preserved). */
-  def withGroupedRank(df: DataFrame, groupCols: Seq[String],
-                      sortCols: Seq[Column], out: String,
-                      parts: Int = 0): DataFrame = {
-    val r = ranged(df, groupCols.map(col) ++ sortCols, parts)
-    val w = Window.partitionBy(col(r.partCol) +: groupCols.map(col): _*)
-      .orderBy(sortCols: _*)
-    r.win.withColumn("__go_rk", rank().over(w).cast("long"))
-      .join(broadcast(groupedOffsets(r.agg, groupCols, count(lit(1)))),
-        PID +: groupCols)
-      .withColumn(out, col("__go_off") + col("__go_rk"))
-      .drop(PID, PLACE, "__go_rk", "__go_off")
-  }
-
-  /** `row_number()` per group over `sortCols`, distributed as
-    * [[withGroupedRank]] (deterministic iff the sort totally orders
-    * each group — the grouped window's own contract). */
-  def withGroupedRowNumber(df: DataFrame, groupCols: Seq[String],
-                           sortCols: Seq[Column], out: String,
-                           parts: Int = 0): DataFrame = {
-    val r = ranged(df, groupCols.map(col) ++ sortCols, parts)
-    val w = Window.partitionBy(col(r.partCol) +: groupCols.map(col): _*)
-      .orderBy(sortCols: _*)
-    r.win.withColumn("__go_rn", row_number().over(w).cast("long"))
-      .join(broadcast(groupedOffsets(r.agg, groupCols, count(lit(1)))),
-        PID +: groupCols)
-      .withColumn(out, col("__go_off") + col("__go_rn"))
-      .drop(PID, PLACE, "__go_rn", "__go_off")
-  }
-
-  // ------------------------------------------------------------------
-  // Cardinality-gated `*Auto` variants.
-  //
-  // The distributed numbering is the correct DEFAULT — an
-  // unpartitioned window is the first thing that stops finishing at
-  // 100 TB — but it carries a fixed stage tax (~1-1.5 s at local[32])
-  // that is pure loss when the numbered relation is PROVABLY small
+  // Cardinality-gated `*Auto` variants. The distributed numbering is
+  // the right DEFAULT — an unpartitioned window is the first thing
+  // that stops finishing at 100 TB — but its fixed stage tax (~1-1.5 s
+  // at local[32]) is pure loss on a PROVABLY small relation
   // (post-aggregation by a dimension key, distinct-value histograms).
-  // These pick per input: at or below [[smallThreshold]] rows the
-  // plain window runs (tiny relation, one task is fine — the exact
-  // situation the P-row offset table itself relies on); above it the
-  // distributed form engages unchanged. Both branches produce
-  // bit-identical values and the same column types (LongType).
-  //
-  // `bound`: caller-supplied row-count bound when one is provable
-  // (skips the gate entirely). `None` splits on the input's shape
-  // (see gated()): a re-evaluable input — deterministic per-row
-  // operators over leaves — takes the NO-PIN path (one bare count
-  // over the pruned scan decides; whichever branch runs re-reads the
-  // scan for free), while a derived input is pinned once and counted
-  // (the pin doubles as the cache the query's sibling aggregates hit,
-  // and both branches consume the pinned frame).
+  // At or below [[smallThreshold]] rows the plain window runs, whatever
+  // the group count; above it the distributed form runs unchanged, with
+  // bit-identical values and column types. `bound`: a caller-supplied
+  // row-count bound, when one is provable, skips the count; with
+  // `None`, [[gated]] counts a re-evaluable input bare and pins a
+  // derived one once (the cache the query's sibling aggregates hit).
   // ------------------------------------------------------------------
 
-  /** [[withRowNumber]] with the small-relation fast path. */
+  /** The one gate: at or below [[smallThreshold]] rows add each
+    * `(out, fn)` as a plain window over (groups, sort); above it run
+    * `big` on the gated input. */
+  private def auto(df: DataFrame, bound: Option[Long],
+                   groupCols: Seq[String], sortCols: Seq[Column],
+                   small: Seq[(String, WindowSpec => Column)])(
+                   big: DataFrame => DataFrame): DataFrame = {
+    val (src, n) = gated(df, bound)
+    if (n > smallThreshold(df.sparkSession)) big(src)
+    else {
+      val w = frame(groupCols.map(col), sortCols)
+      small.foldLeft(src) { case (d, (o, fn)) => d.withColumn(o, fn(w)) }
+    }
+  }
+
   def withRowNumberAuto(df: DataFrame, sortCols: Seq[Column], out: String,
+                        groupCols: Seq[String] = Nil,
                         bound: Option[Long] = None,
-                        parts: Int = 0): DataFrame = {
-    val (src, n) = gated(df, bound)
-    if (n <= smallThreshold(df.sparkSession))
-      src.withColumn(out,
-        row_number().over(Window.orderBy(sortCols: _*)).cast("long"))
-    else withRowNumber(src, sortCols, out, parts)
-  }
+                        parts: Int = 0): DataFrame =
+    auto(df, bound, groupCols, sortCols, Seq(out -> rowNumberFn))(
+      withRowNumber(_, sortCols, out, groupCols, parts))
 
-  /** [[withRank]] with the small-relation fast path. */
   def withRankAuto(df: DataFrame, sortCols: Seq[Column], out: String,
-                   bound: Option[Long] = None, parts: Int = 0): DataFrame = {
-    val (src, n) = gated(df, bound)
-    if (n <= smallThreshold(df.sparkSession))
-      src.withColumn(out,
-        rank().over(Window.orderBy(sortCols: _*)).cast("long"))
-    else withRank(src, sortCols, out, parts)
-  }
+                   groupCols: Seq[String] = Nil, bound: Option[Long] = None,
+                   parts: Int = 0): DataFrame =
+    auto(df, bound, groupCols, sortCols, Seq(out -> rankFn))(
+      withRank(_, sortCols, out, groupCols, parts))
 
-  /** [[withNtile]] with the small-relation fast path (built-in NTILE —
-    * [[withNtile]] reproduces its exact uneven-bucket rule, so the two
-    * branches agree bit-for-bit at every remainder class). */
-  def withNtileAuto(df: DataFrame, n: Int, sortCols: Seq[Column],
-                    out: String, bound: Option[Long] = None,
-                    parts: Int = 0): DataFrame = {
+  /** The small branch is the built-in NTILE, whose uneven-bucket rule
+    * [[withNtile]] reproduces at every remainder class. */
+  def withNtileAuto(df: DataFrame, n: Int, sortCols: Seq[Column], out: String,
+                    bound: Option[Long] = None, parts: Int = 0): DataFrame = {
     require(n > 0, s"ntile bucket count must be positive, got $n")
-    val (src, total) = gated(df, bound)
-    if (total <= smallThreshold(df.sparkSession))
-      src.withColumn(out,
-        ntile(n).over(Window.orderBy(sortCols: _*)).cast("long"))
-    else withNtile(src, n, sortCols, out, parts)
+    auto(df, bound, Nil, sortCols,
+        Seq(out -> ((w: WindowSpec) => ntile(n).over(w).cast("long"))))(
+      withNtile(_, n, sortCols, out, parts))
   }
 
-  /** [[withRunningSum]] with the small-relation fast path. */
-  def withRunningSumAuto(df: DataFrame, sortCols: Seq[Column],
-                         valueCol: Column, out: String,
-                         bound: Option[Long] = None,
-                         parts: Int = 0): DataFrame = {
-    val (src, n) = gated(df, bound)
-    if (n <= smallThreshold(df.sparkSession))
-      src.withColumn(out, sum(valueCol).over(Window.orderBy(sortCols: _*)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    else withRunningSum(src, sortCols, valueCol, out, parts)
-  }
-
-  /** [[withGroupedRowNumber]] with the small-relation fast path (the
-    * plain grouped window — fine when the WHOLE relation is small,
-    * regardless of group count). */
-  def withGroupedRowNumberAuto(df: DataFrame, groupCols: Seq[String],
-                               sortCols: Seq[Column], out: String,
-                               bound: Option[Long] = None,
-                               parts: Int = 0): DataFrame = {
-    val (src, n) = gated(df, bound)
-    if (n <= smallThreshold(df.sparkSession))
-      src.withColumn(out, row_number().over(
-        Window.partitionBy(groupCols.map(col): _*).orderBy(sortCols: _*))
-        .cast("long"))
-    else withGroupedRowNumber(src, groupCols, sortCols, out, parts)
-  }
-
-  /** [[withGroupedRank]] with the small-relation fast path. */
-  def withGroupedRankAuto(df: DataFrame, groupCols: Seq[String],
-                          sortCols: Seq[Column], out: String,
-                          bound: Option[Long] = None,
-                          parts: Int = 0): DataFrame = {
-    val (src, n) = gated(df, bound)
-    if (n <= smallThreshold(df.sparkSession))
-      src.withColumn(out, rank().over(
-        Window.partitionBy(groupCols.map(col): _*).orderBy(sortCols: _*))
-        .cast("long"))
-    else withGroupedRank(src, groupCols, sortCols, out, parts)
-  }
-
-  /** [[withRunningSums]] with the small-relation fast path (same
-    * duplicate/collision validation on both branches; the plain window
-    * computes every prefix in the one sort the distributed form pays a
-    * range shuffle for). */
+  /** Names are validated before the gate, so both branches reject alike. */
   def withRunningSumsAuto(df: DataFrame, sortCols: Seq[Column],
                           sums: Seq[(Column, String)],
+                          groupCols: Seq[String] = Nil,
                           bound: Option[Long] = None,
                           parts: Int = 0): DataFrame = {
-    require(sums.nonEmpty, "need at least one (valueCol, out) sum")
-    require(sums.map(_._2).distinct.size == sums.size,
-      s"duplicate output names in sums: ${sums.map(_._2).mkString(", ")} — " +
-        "the withColumn fold would silently clobber the earlier sum")
-    sums.map(_._2).find(df.columns.contains).foreach { o =>
-      throw new IllegalArgumentException(
-        s"running-sum output name '$o' already exists in the input — " +
-          "it would silently replace the input column; rename one")
-    }
-    val (src, n) = gated(df, bound)
-    if (n <= smallThreshold(df.sparkSession)) {
-      val w = Window.orderBy(sortCols: _*)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      sums.foldLeft(src) { case (d, (v, o)) =>
-        d.withColumn(o, sum(v).over(w)) }
-    } else withRunningSums(src, sortCols, sums, parts)
-  }
-
-  /** [[withGroupedRunningSum]] with the small-relation fast path. */
-  def withGroupedRunningSumAuto(df: DataFrame, groupCols: Seq[String],
-                                sortCols: Seq[Column], valueCol: Column,
-                                out: String, bound: Option[Long] = None,
-                                parts: Int = 0): DataFrame = {
-    val (src, n) = gated(df, bound)
-    if (n <= smallThreshold(df.sparkSession))
-      src.withColumn(out, sum(valueCol).over(
-        Window.partitionBy(groupCols.map(col): _*).orderBy(sortCols: _*)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    else withGroupedRunningSum(src, groupCols, sortCols, valueCol, out, parts)
-  }
-
-  /** Per-group running sum of `valueCol` over `sortCols`
-    * (`rowsBetween(unboundedPreceding, currentRow)` within the
-    * group), distributed as [[withGroupedRank]]. */
-  def withGroupedRunningSum(df: DataFrame, groupCols: Seq[String],
-                            sortCols: Seq[Column], valueCol: Column,
-                            out: String, parts: Int = 0): DataFrame = {
-    val r = ranged(df.withColumn("__go_v", valueCol),
-      groupCols.map(col) ++ sortCols, parts)
-    val w = Window.partitionBy(col(r.partCol) +: groupCols.map(col): _*)
-      .orderBy(sortCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    r.win.withColumn("__go_ps", sum("__go_v").over(w))
-      .join(broadcast(groupedOffsets(r.agg, groupCols, sum(col("__go_v")))),
-        PID +: groupCols)
-      .withColumn(out, col("__go_off") + col("__go_ps"))
-      .drop(PID, PLACE, "__go_v", "__go_ps", "__go_off")
+    checkSums(df, sums)
+    auto(df, bound, groupCols, sortCols,
+        sums.map { case (v, o) => o -> ((w: WindowSpec) => sum(v).over(w)) })(
+      withRunningSums(_, sortCols, sums, groupCols, parts))
   }
 }

@@ -101,35 +101,25 @@ object Stats {
     * pre-aggregate is pure overhead, which is why this takes raw
     * rows). It is evaluated 2 + |ratios| times, each a map-side pass
     * (scan + broadcast join) — hand it a cheap-to-rescan subtree (a
-    * column-pruned table scan), a frame you have ALREADY materialized
+    * column-pruned table scan) or a frame you have ALREADY materialized
     * (cached / checkpointed / a bucketed table — the passes then read
-    * its blocks, no code change needed), or set `materialize = true`
-    * to have the operator pin the projection itself: ONE source scan,
-    * every pass reads the pinned blocks (eager local checkpoint,
-    * ContextCleaner-released). Whether the pin wins is a measured
-    * trade: rescanning a column-pruned parquet scan is itself cheap
-    * and page-cache-friendly, while the pin pays one materialization
-    * + block reads — A/B at your scale (BASELINE.md round 12 records
-    * both at sf10). Intended for LOW-cardinality groups (G-row tables
-    * are broadcast). */
+    * its blocks). Rescanning is the measured choice: a pinned
+    * projection lost to the rescan at sf10 (BASELINE.md round 12).
+    * Intended for LOW-cardinality groups (G-row tables are
+    * broadcast). */
   def groupedWeightedCrossings(rows: DataFrame, groupCols: Seq[String],
                                vCol: String, wCol: String,
                                ratios: Seq[(Long, Long, String)],
-                               buckets: Int = 1024,
-                               materialize: Boolean = false): DataFrame = {
+                               buckets: Int = 1024): DataFrame = {
     require(ratios.nonEmpty, "need at least one crossing ratio")
     ratios.foreach { case (k, m, _) =>
       require(k >= m && m >= 0 && k > 0, s"bad crossing ratio m/k = $m/$k") }
-    val rows0 = rows
-    val rowsP = if (materialize) LoopCheckpoint.once(
-      rows0.select((groupCols.map(col) :+ col(vCol)) :+ col(wCol): _*))
-      else rows0
     val g = groupCols.map(col)
     // the crossing rule is only monotone for non-negative weights; a
     // signed-weight caller would get a silently wrong quantile, so the
     // guard rides the per-group range aggregate the pass already pays
     // (raise_error only evaluates on violation — Graph.guarded pattern)
-    val rng = rowsP.groupBy(g: _*).agg(
+    val rng = rows.groupBy(g: _*).agg(
         min(vCol).as("__mn"), max(vCol).as("__mx"), sum(wCol).as("__tot"),
         min(wCol).as("__wmn"))
       .withColumn("__tot",
@@ -139,7 +129,7 @@ object Stats {
                "non-negative weights'))"))
           .otherwise(col("__tot")))
       .drop("__wmn")
-    def bucketed = rowsP.join(broadcast(rng), groupCols)
+    def bucketed = rows.join(broadcast(rng), groupCols)
       .withColumn("__bk",
         expr(s"($vCol - __mn) div ((__mx - __mn) div $buckets + 1)"))
     val wb = Window.partitionBy(g: _*).orderBy("__bk")
@@ -175,10 +165,9 @@ object Stats {
   /** Single-ratio form of [[groupedWeightedCrossings]]. */
   def groupedWeightedCrossing(rows: DataFrame, groupCols: Seq[String],
                               vCol: String, wCol: String, k: Long, m: Long,
-                              out: String, buckets: Int = 1024,
-                              materialize: Boolean = false): DataFrame =
+                              out: String, buckets: Int = 1024): DataFrame =
     groupedWeightedCrossings(rows, groupCols, vCol, wCol,
-      Seq((k, m, out)), buckets, materialize)
+      Seq((k, m, out)), buckets)
 
   /** Per-group median and median absolute deviation — the robust
     * location/scale pair (outlier-resistant alternative to mean/σ,
@@ -190,24 +179,18 @@ object Stats {
     * values, once to |value − median|. Each pass is a
     * [[groupedWeightedCrossing]] over the RAW rows — histogram
     * crossing: no sort, no per-value pre-aggregate, no
-    * materialization by default; `df` is re-scanned ~6× map-side, so
-    * hand it a cheap subtree (a column-pruned scan), a frame you have
-    * already materialized (cached / bucketed — works with no flag), or
-    * set `materialize = true` to pin the 2-3 column projection ONCE
-    * (eager local checkpoint): the source is scanned once and all six
-    * passes read the pinned blocks. Which form wins is scale- and
-    * storage-dependent — rescanning a pruned parquet projection rides
-    * the page cache; the pin trades one materialization for five
-    * avoided scans (BASELINE.md round 12 records the sf10 A/B). The
+    * materialization; `df` is re-scanned ~6× map-side, so hand it a
+    * cheap subtree (a column-pruned scan) or a frame you have already
+    * materialized (cached / bucketed). Rescanning a pruned parquet
+    * projection rides the page cache and beat a one-time pin at sf10
+    * (BASELINE.md round 12 records the A/B). The
     * median table is group-cardinality sized, so the join back is a
     * broadcast at any data scale.
     */
   def medianAbsDev(df: DataFrame, groupCols: Seq[String],
-                   valueCol: Column,
-                   materialize: Boolean = false): DataFrame = {
-    val d0 = df.select(groupCols.map(col) :+ valueCol.cast("long").as("v"): _*)
+                   valueCol: Column): DataFrame = {
+    val d = df.select(groupCols.map(col) :+ valueCol.cast("long").as("v"): _*)
       .withColumn("w", lit(1L))
-    val d = if (materialize) LoopCheckpoint.once(d0) else d0
     val med = groupedWeightedCrossing(
       d, groupCols, "v", "w", k = 2, m = 1, out = "median")
     val dev = d.join(broadcast(med), groupCols)

@@ -84,12 +84,12 @@ private[graft] object CorpusQueries {
       // auto-gated (round-14): the input is a scan projection, so the
       // gate is one pruned count; below the threshold the plain grouped
       // window walks the cumulative weight in one tiny sort
-      graft.operators.GlobalOrder.withGroupedRunningSumAuto(
+      graft.operators.GlobalOrder.withRunningSumsAuto(
           Tables.load(s, dir, "documents")
             .select(col("doc_id"), col("lang"),
               graft.functions.TextAnalysis.tokenCount(col("text"))
                 .cast("long").as("wt")),
-          Seq("lang"), Seq(col("doc_id")), col("wt"), "cum")
+          Seq(col("doc_id")), Seq(col("wt") -> "cum"), groupCols = Seq("lang"))
         .filter(expr("cum div 500") > expr("(cum - wt) div 500"))),
 
     // ---- training-mix construction end-to-end: apportion a 200-doc
@@ -107,9 +107,10 @@ private[graft] object CorpusQueries {
       // (an explicit metadata-count bound was measured SLOWER here —
       // the extra count job dominates a sub-second single-consumer
       // query; the gate pin is the right shape)
-      graft.operators.GlobalOrder.withGroupedRowNumberAuto(
-          docs.join(broadcast(quotas), "source"), Seq("source"),
-          Seq(col("n_chars").desc, col("doc_id")), "rn")
+      graft.operators.GlobalOrder.withRowNumberAuto(
+          docs.join(broadcast(quotas), "source"),
+          Seq(col("n_chars").desc, col("doc_id")), "rn",
+          groupCols = Seq("source"))
         .filter(col("rn") <= col("quota"))
         .select(col("doc_id"), col("source"))
     }),
@@ -123,9 +124,9 @@ private[graft] object CorpusQueries {
         .withColumn("src_idx",
           row_number().over(Window.orderBy("source")).cast("long"))
       // auto-gated grouped numbering (see q_budget_select)
-      graft.operators.GlobalOrder.withGroupedRowNumberAuto(
-          docs.join(broadcast(srcIdx), "source"), Seq("source"),
-          Seq(col("doc_id")), "round")
+      graft.operators.GlobalOrder.withRowNumberAuto(
+          docs.join(broadcast(srcIdx), "source"), Seq(col("doc_id")), "round",
+          groupCols = Seq("source"))
         .select(col("doc_id"), col("source"), col("round"), col("src_idx"))
     }),
 
@@ -201,8 +202,8 @@ private[graft] object CorpusQueries {
       val tot = per.agg(sum("rev").as("total_rev"))
       // auto-gated (round-14): the gate persist of `per` is also the
       // cache the total-revenue aggregate hits
-      graft.operators.GlobalOrder.withRunningSumAuto(
-          per, Seq(col("o_custkey")), col("rev"), "cum")
+      graft.operators.GlobalOrder.withRunningSumsAuto(
+          per, Seq(col("o_custkey")), Seq(col("rev") -> "cum"))
         .crossJoin(broadcast(tot))
         .withColumn("stride", expr("total_rev div 500"))
         .filter(col("stride") > 0)

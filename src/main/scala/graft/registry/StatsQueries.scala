@@ -168,8 +168,9 @@ private[graft] object StatsQueries {
       // (round-14): below the threshold the plain grouped window wins
       // by the distributed form's fixed stage tax; the gate persist is
       // also the cache the downstream aggregate hits
-      graft.operators.GlobalOrder.withGroupedRowNumberAuto(
-          perCust, Seq("c_nationkey"), Seq(col("x"), col("c_custkey")), "i")
+      graft.operators.GlobalOrder.withRowNumberAuto(
+          perCust, Seq(col("x"), col("c_custkey")), "i",
+          groupCols = Seq("c_nationkey"))
         .groupBy("c_nationkey")
         .agg(count(lit(1)).as("n"), sum("x").as("sx"),
              sum(expr("i * x")).as("six"))
@@ -193,8 +194,8 @@ private[graft] object StatsQueries {
       // grouped window skips the distributed form's fixed stage tax.
       // `base` is a scan projection, so the gate is one pruned count —
       // no pin on either branch
-      graft.operators.GlobalOrder.withGroupedRankAuto(
-          base, Seq("o_orderpriority"), Seq(col("cents")), "rk")
+      graft.operators.GlobalOrder.withRankAuto(
+          base, Seq(col("cents")), "rk", groupCols = Seq("o_orderpriority"))
         .join(broadcast(totals), "o_orderpriority")
         .select(col("o_orderkey"), col("o_orderpriority"), col("cents"),
           expr("(rk - 1) * 1000000 div (n - 1)").as("pct_rank_ppm"))
@@ -289,8 +290,9 @@ private[graft] object StatsQueries {
       // threshold the plain grouped window wins. The gate persist is
       // also the cache the sibling aggregates (nSrc, vals, total) hit
       val nSrc = d.groupBy("source").agg(count(lit(1)).as("n_src"))
-      val ranked = graft.operators.GlobalOrder.withGroupedRowNumberAuto(
-          d, Seq("source"), Seq(col("n_chars"), col("doc_id")), "rk")
+      val ranked = graft.operators.GlobalOrder.withRowNumberAuto(
+          d, Seq(col("n_chars"), col("doc_id")), "rk",
+          groupCols = Seq("source"))
         .join(broadcast(nSrc), "source")
         .withColumn("p_ppm",
           when(col("n_src") > 1,
@@ -329,8 +331,8 @@ private[graft] object StatsQueries {
       // the total-revenue aggregate hits (plan-subtree match; explicit
       // pins and metadata-count bounds were both measured slower and
       // reverted — BASELINE.md round 11)
-      graft.operators.GlobalOrder.withRunningSumAuto(per,
-          Seq(col("rev").desc, col("l_partkey")), col("rev"), "cum")
+      graft.operators.GlobalOrder.withRunningSumsAuto(per,
+          Seq(col("rev").desc, col("l_partkey")), Seq(col("rev") -> "cum"))
         .crossJoin(broadcast(tot))
         // cum·10⁶ tops BIGINT at ~sf1 total revenue (DuckDB's sum is
         // already HUGEINT, so a Spark wrap would diverge silently) —
@@ -413,8 +415,8 @@ private[graft] object StatsQueries {
       val byV = e.groupBy("v")
         .agg(sum("is_a").as("ca"), count(lit(1)).as("ct"))
       // auto-gated (round-14): distinct support values gate the branch
-      val ranked = graft.operators.GlobalOrder.withRunningSumAuto(
-          byV, Seq(col("v")), col("ct"), "cum_ct")
+      val ranked = graft.operators.GlobalOrder.withRunningSumsAuto(
+          byV, Seq(col("v")), Seq(col("ct") -> "cum_ct"))
         .withColumn("before", col("cum_ct") - col("ct"))
       val tot = e.agg(sum("is_a").as("n_a"),
         sum(expr("1 - is_a")).as("n_b"))

@@ -62,6 +62,37 @@ object Protocol {
       s"$n households with encounters still unprocessed — run phase 1 first")
   }
 
+  /** Refuse a `persons` frame that lazily reads the sink it is about to
+    * be written into (e.g. a join with `KeyedUpsert.read(sinkPath)` for
+    * the history column): the upsert swaps the sink's bucket files, and
+    * the phase-2 count re-evaluates `persons` against the replaced file
+    * listing and dies with FAILED_READ_FILE.FILE_NOT_EXIST after phase
+    * 1 has already been written. Checked before the first write, after
+    * the count gate: a re-run with nothing pending writes nothing, so
+    * it may read the sink. Plan-only: walks the analyzed plan's file
+    * relations, runs no job. */
+  private def requireNotReadingSink(persons: DataFrame,
+                                    sinkPath: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    val sink = new Path(sinkPath)
+    val root = sink.getFileSystem(
+      persons.sparkSession.sparkContext.hadoopConfiguration)
+      .makeQualified(sink).toString
+    val reads = persons.queryExecution.analyzed.collectWithSubqueries {
+      case LogicalRelation(h: HadoopFsRelation, _, _, _, _) =>
+        h.location.rootPaths
+    }.flatten.map(_.toString)
+    reads.find(p => p == root || p.startsWith(root + "/")).foreach { p =>
+      throw new IllegalArgumentException(
+        s"persons reads $p, under the sink $sinkPath it is written into: the " +
+          "upsert would replace the files it reads mid-run. Stage the " +
+          "persons-with-history snapshot as its own parquet first " +
+          "(write it out, read it back) and pass that.")
+    }
+  }
+
   /** Full two-phase run with gates, writing per-person nested history
     * to the keyed sink. Returns the number of persons written by THIS
     * run — |pending| + |phase-2 leftovers|, both counted on the narrow
@@ -76,6 +107,7 @@ object Protocol {
     val pending = personsWithoutRetention(persons)
     val nPending = pending.count() // the A6 count gate, value reused (:628)
     if (nPending == 0L) return 0L
+    requireNotReadingSink(persons, sinkPath)
     val phase1 = Retention.nestRanges(
       Retention.personRanges(pending, encounters, cfg))
     KeyedUpsert.upsert(spark, sinkPath, phase1, "person_id", numBuckets)

@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.GlobalOrder
 
-/** Contracts for the cardinality-gated `*Auto` numbering variants:
+/** Contracts for the cardinality-gated `*Auto` numbering variants
+  * (titles name the grouped forms `withGrouped*Auto` and the one-sum
+  * form `withRunningSumAuto`: the `groupCols` and one-element calls):
   *
   *   1. value equality — whichever branch the gate picks, the output
   *      must equal the single-partition window bit-for-bit (same
@@ -126,8 +128,8 @@ class GlobalOrderAutoSpec extends SparkSpec {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select("k", "cum").as[(Long, Long)].collect().toMap
     for (t <- Seq(10L, 100000L)) withThreshold(t) {
-      val out = GlobalOrder.withRunningSumAuto(
-        df, Seq(col("v"), col("k")), col("v") + 1, "cum")
+      val out = GlobalOrder.withRunningSumsAuto(
+        df, Seq(col("v"), col("k")), Seq(col("v") + 1 -> "cum"))
       assert(hasJoin(out) == (t == 10L))
       assert(out.select("k", "cum").as[(Long, Long)].collect().toMap == want,
         s"threshold=$t")
@@ -144,8 +146,8 @@ class GlobalOrderAutoSpec extends SparkSpec {
           .orderBy(col("v"), col("k"))).cast("long"))
       .select("k", "rn").as[(Long, Long)].collect().toMap
     for (t <- Seq(10L, 100000L)) withThreshold(t) {
-      val out = GlobalOrder.withGroupedRowNumberAuto(
-        df, Seq("g"), Seq(col("v"), col("k")), "rn")
+      val out = GlobalOrder.withRowNumberAuto(
+        df, Seq(col("v"), col("k")), "rn", groupCols = Seq("g"))
       assert(hasJoin(out) == (t == 10L))
       assert(out.select("k", "rn").as[(Long, Long)].collect().toMap == want,
         s"threshold=$t")
@@ -161,7 +163,8 @@ class GlobalOrderAutoSpec extends SparkSpec {
         rank().over(Window.partitionBy("g").orderBy(col("v"))).cast("long"))
       .select("k", "rk").as[(Long, Long)].collect().toSeq.sorted
     for (t <- Seq(10L, 100000L)) withThreshold(t) {
-      val out = GlobalOrder.withGroupedRankAuto(df, Seq("g"), Seq(col("v")), "rk")
+      val out = GlobalOrder.withRankAuto(
+        df, Seq(col("v")), "rk", groupCols = Seq("g"))
       assert(hasJoin(out) == (t == 10L))
       assert(out.select("k", "rk").as[(Long, Long)].collect().toSeq.sorted
         == want, s"threshold=$t")
@@ -204,8 +207,8 @@ class GlobalOrderAutoSpec extends SparkSpec {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select("k", "cum").as[(Long, Long)].collect().toMap
     for (t <- Seq(10L, 100000L)) withThreshold(t) {
-      val out = GlobalOrder.withGroupedRunningSumAuto(
-        df, Seq("g"), Seq(col("k")), col("v"), "cum")
+      val out = GlobalOrder.withRunningSumsAuto(
+        df, Seq(col("k")), Seq(col("v") -> "cum"), groupCols = Seq("g"))
       assert(hasJoin(out) == (t == 10L))
       assert(out.select("k", "cum").as[(Long, Long)].collect().toMap == want,
         s"threshold=$t")

@@ -10,7 +10,9 @@ import graft.operators.GlobalOrder
   * every numbering must equal the single-partition window's value on
   * randomized data (ties, desc order, uneven ntile remainders), and
   * the executed plan must contain NO SinglePartition exchange over the
-  * data — the scale-killer the operator exists to remove. */
+  * data — the scale-killer the operator exists to remove. Titles name
+  * the grouped forms `withGrouped*` and the one-sum form
+  * `withRunningSum`: those are the `groupCols` and one-element calls. */
 class GlobalOrderSpec extends SparkSpec {
   import spark.implicits._
 
@@ -23,7 +25,8 @@ class GlobalOrderSpec extends SparkSpec {
 
   test("withRowNumber matches the global window under a total tiebreak") {
     val df = fixture(5000, 1)
-    val got = GlobalOrder.withRowNumber(df, Seq(col("v"), col("k")), "rn", 8)
+    val got = GlobalOrder.withRowNumber(
+        df, Seq(col("v"), col("k")), "rn", parts = 8)
       .select("k", "rn").as[(Long, Long)].collect().toMap
     val want = df.withColumn("rn",
         row_number().over(Window.orderBy(col("v"), col("k"))).cast("long"))
@@ -33,7 +36,7 @@ class GlobalOrderSpec extends SparkSpec {
 
   test("withRank matches global rank gaps on tie-heavy data, desc order") {
     val df = fixture(3000, 2)
-    val got = GlobalOrder.withRank(df, Seq(col("v").desc), "rk", 8)
+    val got = GlobalOrder.withRank(df, Seq(col("v").desc), "rk", parts = 8)
       .select("k", "rk").as[(Long, Long)].collect().toMap
     val want = df.withColumn("rk",
         rank().over(Window.orderBy(col("v").desc)).cast("long"))
@@ -45,7 +48,8 @@ class GlobalOrderSpec extends SparkSpec {
   test("withNtile matches NTILE for every remainder class") {
     for (n <- Seq(1, 4, 7, 64); rows <- Seq(3, 64, 257)) {
       val df = fixture(rows, n * 1000L + rows)
-      val got = GlobalOrder.withNtile(df, n, Seq(col("v"), col("k")), "t", 5)
+      val got = GlobalOrder.withNtile(
+          df, n, Seq(col("v"), col("k")), "t", parts = 5)
         .select("k", "t").as[(Long, Long)].collect().toMap
       val want = df.withColumn("t",
           ntile(n).over(Window.orderBy(col("v"), col("k"))).cast("long"))
@@ -56,8 +60,8 @@ class GlobalOrderSpec extends SparkSpec {
 
   test("withRunningSum matches the global cumulative window") {
     val df = fixture(4000, 3)
-    val got = GlobalOrder.withRunningSum(
-        df, Seq(col("v"), col("k")), col("v") * 3 + 1, "cum", 8)
+    val got = GlobalOrder.withRunningSums(
+        df, Seq(col("v"), col("k")), Seq(col("v") * 3 + 1 -> "cum"), parts = 8)
       .select("k", "cum").as[(Long, Long)].collect().toMap
     val want = df.withColumn("cum",
         sum(col("v") * 3 + 1).over(Window.orderBy(col("v"), col("k"))
@@ -71,7 +75,8 @@ class GlobalOrderSpec extends SparkSpec {
     val got = GlobalOrder.withRunningSums(
         df, Seq(col("v"), col("k")),
         Seq((col("v") * 3 + 1, "c1"), (lit(1L), "c2"),
-            (when(col("v") % 2 === 0, col("v")).otherwise(lit(0L)), "c3")), 8)
+            (when(col("v") % 2 === 0, col("v")).otherwise(lit(0L)), "c3")),
+        parts = 8)
       .select("k", "c1", "c2", "c3").as[(Long, Long, Long, Long)]
       .collect().map { case (k, a, b, c) => k -> (a, b, c) }.toMap
     val w = Window.orderBy(col("v"), col("k"))
@@ -88,7 +93,8 @@ class GlobalOrderSpec extends SparkSpec {
 
   test("no SinglePartition exchange in the data path") {
     val df = fixture(2000, 4)
-    val out = GlobalOrder.withRowNumber(df, Seq(col("v"), col("k")), "rn", 8)
+    val out = GlobalOrder.withRowNumber(
+        df, Seq(col("v"), col("k")), "rn", parts = 8)
     out.count() // execute so AQE finalizes
     val plan = out.queryExecution.executedPlan.toString
     // the P-row offset table may legitimately single-partition; the
@@ -121,8 +127,8 @@ class GlobalOrderSpec extends SparkSpec {
 
   test("withGroupedRank matches the grouped window on tie-heavy data") {
     val df = grouped(5000, 6)
-    val got = GlobalOrder.withGroupedRank(
-        df, Seq("g"), Seq(col("v")), "rk", 8)
+    val got = GlobalOrder.withRank(
+        df, Seq(col("v")), "rk", groupCols = Seq("g"), parts = 8)
       .select("k", "rk").as[(Long, Long)].collect().toMap
     val want = df.withColumn("rk",
         rank().over(Window.partitionBy("g").orderBy(col("v"))).cast("long"))
@@ -132,8 +138,8 @@ class GlobalOrderSpec extends SparkSpec {
 
   test("withGroupedRowNumber matches under a total in-group tiebreak") {
     val df = grouped(4000, 7)
-    val got = GlobalOrder.withGroupedRowNumber(
-        df, Seq("g"), Seq(col("v").desc, col("k")), "rn", 8)
+    val got = GlobalOrder.withRowNumber(
+        df, Seq(col("v").desc, col("k")), "rn", groupCols = Seq("g"), parts = 8)
       .select("k", "rn").as[(Long, Long)].collect().toMap
     val want = df.withColumn("rn",
         row_number().over(Window.partitionBy("g")
@@ -144,8 +150,9 @@ class GlobalOrderSpec extends SparkSpec {
 
   test("withGroupedRunningSum matches the grouped cumulative window") {
     val df = grouped(4000, 8)
-    val got = GlobalOrder.withGroupedRunningSum(
-        df, Seq("g"), Seq(col("v"), col("k")), col("v") * 3 + 1, "cum", 8)
+    val got = GlobalOrder.withRunningSums(
+        df, Seq(col("v"), col("k")), Seq(col("v") * 3 + 1 -> "cum"),
+        groupCols = Seq("g"), parts = 8)
       .select("k", "cum").as[(Long, Long)].collect().toMap
     val want = df.withColumn("cum",
         sum(col("v") * 3 + 1).over(Window.partitionBy("g")
@@ -158,7 +165,7 @@ class GlobalOrderSpec extends SparkSpec {
   test("grouped variants handle a single-group and a one-row group") {
     val df = Seq((1L, "a", 5L), (2L, "a", 5L), (3L, "a", 1L), (4L, "b", 9L))
       .toDF("k", "g", "v").repartition(3)
-    val rk = GlobalOrder.withGroupedRank(df, Seq("g"), Seq(col("v")), "rk", 4)
+    val rk = GlobalOrder.withRank(df, Seq(col("v")), "rk", Seq("g"), 4)
       .select("k", "rk").as[(Long, Long)].collect().toMap
     assert(rk == Map(1L -> 2L, 2L -> 2L, 3L -> 1L, 4L -> 1L))
   }
@@ -167,35 +174,46 @@ class GlobalOrderSpec extends SparkSpec {
     val df = fixture(100, 5).filter(col("v") < -1)
     assert(GlobalOrder.withRowNumber(df, Seq(col("k")), "rn").count() == 0)
     assert(GlobalOrder.withNtile(df, 4, Seq(col("k")), "t").count() == 0)
-    assert(GlobalOrder.withRunningSum(df, Seq(col("k")), col("v"), "c")
+    assert(GlobalOrder.withRunningSums(df, Seq(col("k")), Seq(col("v") -> "c"))
       .count() == 0)
   }
 
   // ------------------------------------------------------------------
   // bounds strategy (round 14): literal split points + bisect pid —
-  // the pin-free plan. Differentials against both the window AND the
-  // legacy checkpoint strategy, plus the physical guarantees the
-  // design leans on.
+  // the pin-free plan — and the pinned range-exchange plan that
+  // non-comparable sort keys take. Differentials against the window,
+  // plus the physical guarantees the design leans on.
   // ------------------------------------------------------------------
 
-  private def withStrategy[T](s: String)(body: => T): T = {
-    val key = "spark.graft.globalorder.strategy"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, s)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+  /** Tie-heavy BINARY sort key: the driver-side sample cannot order
+    * it, so every numbering takes the pinned range-exchange plan. */
+  private def binaryKeyed(n: Int, seed: Long) = {
+    val r = new scala.util.Random(seed)
+    (0 until n).map(i => (i.toLong, Array[Byte](r.nextInt(6).toByte,
+        r.nextInt(4).toByte)))
+      .toDF("k", "b").repartition(5)
   }
 
-  test("bounds and checkpoint strategies number identically") {
-    val df = fixture(4000, 11)
-    def run() = GlobalOrder.withRowNumber(
-        df, Seq(col("v").desc, col("k")), "rn", 8)
-      .select("k", "rn").as[(Long, Long)].collect().toMap
-    val b = withStrategy("bounds")(run())
-    val c = withStrategy("checkpoint")(run())
-    assert(b == c)
+  test("binary sort keys take the pinned plan and match the window") {
+    val df = binaryKeyed(3000, 11)
+    graft.operators.CheckpointScope.scoped {
+      val rn = GlobalOrder.withRowNumber(
+          df, Seq(col("b").desc, col("k")), "rn", parts = 8)
+        .select("k", "rn").as[(Long, Long)].collect().toMap
+      assert(graft.operators.CheckpointScope.pendingCount == 1,
+        "a non-comparable key must pin the range-exchanged frame")
+      val wantRn = df.withColumn("rn", row_number().over(
+          Window.orderBy(col("b").desc, col("k"))).cast("long"))
+        .select("k", "rn").as[(Long, Long)].collect().toMap
+      assert(rn == wantRn)
+    }
+    val rk = GlobalOrder.withRank(df, Seq(col("b")), "rk", parts = 8)
+      .select("k", "rk").as[(Long, Long)].collect().toMap
+    val wantRk = df.withColumn("rk",
+        rank().over(Window.orderBy(col("b"))).cast("long"))
+      .select("k", "rk").as[(Long, Long)].collect().toMap
+    assert(rk == wantRk)
+    assert(rk.values.toSet.size < 30, "fixture must actually have ties")
   }
 
   test("bounds strategy honors explicit null orderings") {
@@ -205,7 +223,7 @@ class GlobalOrderSpec extends SparkSpec {
     val df = rows.toDF("k", "v").repartition(3)
     for (sort <- Seq(col("v").asc_nulls_last, col("v").desc_nulls_first,
                      col("v").asc_nulls_first, col("v").desc_nulls_last)) {
-      val got = GlobalOrder.withRank(df, Seq(sort), "rk", 4)
+      val got = GlobalOrder.withRank(df, Seq(sort), "rk", parts = 4)
         .select("k", "rk").as[(Long, Long)].collect().toMap
       val want = df.withColumn("rk",
           rank().over(Window.orderBy(sort)).cast("long"))
@@ -219,7 +237,8 @@ class GlobalOrderSpec extends SparkSpec {
     val df = (0 until 3000)
       .map(i => (i.toLong, s"w${r.nextInt(50)}%03d")).toDF("k", "s")
       .repartition(7)
-    val got = GlobalOrder.withRowNumber(df, Seq(col("s"), col("k")), "rn", 8)
+    val got = GlobalOrder.withRowNumber(
+        df, Seq(col("s"), col("k")), "rn", parts = 8)
       .select("k", "rn").as[(Long, Long)].collect().toMap
     val want = df.withColumn("rn",
         row_number().over(Window.orderBy(col("s"), col("k"))).cast("long"))
@@ -230,7 +249,7 @@ class GlobalOrderSpec extends SparkSpec {
   test("degenerate all-equal sort key still numbers correctly") {
     val df = (0 until 1000).map(i => (i.toLong, 7L)).toDF("k", "v")
       .repartition(5)
-    val got = GlobalOrder.withRank(df, Seq(col("v")), "rk", 8)
+    val got = GlobalOrder.withRank(df, Seq(col("v")), "rk", parts = 8)
       .select("rk").as[Long].collect()
     assert(got.forall(_ == 1L), "all ties must share global rank 1")
   }
@@ -241,16 +260,16 @@ class GlobalOrderSpec extends SparkSpec {
     val df = (0 until 3000).map(i => (i.toLong, r.nextInt(40).toLong))
       .toDF("k", "v")
     graft.operators.CheckpointScope.scoped {
-      GlobalOrder.withRowNumber(df, Seq(col("v"), col("k")), "rn", 8).count()
+      GlobalOrder.withRowNumber(
+          df, Seq(col("v"), col("k")), "rn", parts = 8).count()
       assert(graft.operators.CheckpointScope.pendingCount == 0,
         "pin-free plan must not register checkpoint frames")
     }
-    withStrategy("checkpoint") {
-      graft.operators.CheckpointScope.scoped {
-        GlobalOrder.withRowNumber(df, Seq(col("v"), col("k")), "rn", 8).count()
-        assert(graft.operators.CheckpointScope.pendingCount == 1,
-          "positive control: legacy strategy pins the ranged frame")
-      }
+    graft.operators.CheckpointScope.scoped {
+      GlobalOrder.withRowNumber(binaryKeyed(3000, 17),
+        Seq(col("b"), col("k")), "rn", parts = 8).count()
+      assert(graft.operators.CheckpointScope.pendingCount == 1,
+        "positive control: the range-exchange plan pins the ranged frame")
     }
   }
 
@@ -260,7 +279,8 @@ class GlobalOrderSpec extends SparkSpec {
     val df = fixture(3000, 18).groupBy("v")
       .agg(count(lit(1)).as("n"))
     graft.operators.CheckpointScope.scoped {
-      val got = GlobalOrder.withRowNumber(df, Seq(col("n"), col("v")), "rn", 8)
+      val got = GlobalOrder.withRowNumber(
+          df, Seq(col("n"), col("v")), "rn", parts = 8)
       got.count()
       assert(graft.operators.CheckpointScope.pendingCount == 1,
         "derived input must be pinned once")
@@ -294,7 +314,8 @@ class GlobalOrderSpec extends SparkSpec {
     // 40k rows, 8 ranges: no physical partition may hold more than
     // ~3x its fair share (the sampled bounds + slot placement promise)
     val df = fixture(40000, 19)
-    val got = GlobalOrder.withRowNumber(df, Seq(col("v"), col("k")), "rn", 8)
+    val got = GlobalOrder.withRowNumber(
+        df, Seq(col("v"), col("k")), "rn", parts = 8)
     val byPart = got.select(spark_partition_id().as("p"))
       .groupBy("p").count().as[(Int, Long)].collect()
     // numbering output partitioning reflects the range shuffle

@@ -63,6 +63,40 @@ class HyperplaneBucketsSpec extends SparkSpec {
     assert(kernel == agg)
   }
 
+  test("NaN, ±Inf and empty embeddings match the aggregate form, " +
+       "codegen and interpreted") {
+    val rows = Seq(
+      (1L, Seq[java.lang.Double](Double.NaN, 0.25, -0.5) ++
+        Seq.fill[java.lang.Double](61)(0.125)),
+      (2L, Seq[java.lang.Double](Double.PositiveInfinity, -0.75, 0.5)),
+      (3L, Seq[java.lang.Double](0.5, Double.NegativeInfinity, null, 1e307)),
+      (4L, Seq.empty[java.lang.Double])
+    ).toDF("vec_id", "embedding")
+    // the aggregate form's round(x·1000) cast to long takes non-finite
+    // values only with ANSI off (NaN → 0, ±Inf → ±Long bound, wrapping
+    // products); the kernel reproduces that cast
+    val want = withConf("spark.sql.ansi.enabled" -> "false") {
+      collect(aggregateForm(rows, 16, 4))
+    }
+    assert(!want.keySet.exists(_._1 == 4L), "empty vector explodes to no rows")
+    for ((mode, wholeStage) <- Seq(("CODEGEN_ONLY", "true"),
+                                   ("NO_CODEGEN", "false")))
+      withConf("spark.sql.codegen.factoryMode" -> mode,
+               "spark.sql.codegen.wholeStage" -> wholeStage) {
+        assert(collect(Similarity.hyperplaneLshBuckets(rows, 16, 4)) == want,
+          s"factoryMode=$mode")
+      }
+  }
+
+  private def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("plan is a single projection — no joins, no aggregation") {
     val emb = Tables.load(spark, "/root/testdata/sf0.01", "embeddings")
     val plan = Similarity.hyperplaneLshBuckets(emb, 16, 4)

@@ -199,6 +199,40 @@ class UpsertProtocolSpec extends SparkSpec {
     assert(Protocol.run(spark, personsDone, encounters, cfg, path, 8) == 0L)
   }
 
+  test("Protocol.run refuses a persons frame that lazily reads its own sink") {
+    val path = Files.createTempDirectory("proto_self").toString + "/hist"
+    def persons(ids: Range) = ids.map(i => (i.toLong, s"H${i % 40}"))
+      .toDF("person_id", "household_id")
+    val encounters = (1 to 300).filter(_ % 3 == 0)
+      .map(i => (i.toLong, java.sql.Date.valueOf(
+        LocalDate.of(2021, 1, 1).plusDays(i % 150))))
+      .toDF("person_id", "admit_date")
+    assert(Protocol.run(spark, persons(1 to 200), encounters, cfg, path, 8) == 200)
+    val before = KeyedUpsert.read(spark, path)
+      .select($"person_id", to_json($"household_retention_history"))
+      .as[(Long, String)].collect().toMap
+    // a 100-person delivery whose history column is a lazy join with
+    // the sink it is about to be upserted into
+    val delivery = persons(1 to 300).join(
+      KeyedUpsert.read(spark, path)
+        .select($"person_id", $"household_retention_history"),
+      Seq("person_id"), "left")
+    val e = intercept[IllegalArgumentException] {
+      Protocol.run(spark, delivery, encounters, cfg, path, 8)
+    }
+    assert(e.getMessage.contains("Stage"), e.getMessage)
+    val after = KeyedUpsert.read(spark, path)
+      .select($"person_id", to_json($"household_retention_history"))
+      .as[(Long, String)].collect().toMap
+    assert(after == before, "the refused run must not touch the sink")
+    // the staged snapshot the message names goes through
+    val snapshot = Files.createTempDirectory("proto_snap").toString + "/p"
+    delivery.write.parquet(snapshot)
+    assert(Protocol.run(spark, spark.read.parquet(snapshot), encounters,
+      cfg, path, 8) == 100)
+    assert(KeyedUpsert.read(spark, path).count() == 300)
+  }
+
   test("RetentionJob: args-configured end-to-end run, reference output schema") {
     import org.apache.spark.sql.types.{ArrayType, StructType}
     import graft.retention.RetentionJob
