@@ -8,19 +8,33 @@ import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
+/** Which right row an as-of probe matches — pandas `merge_asof`'s
+  * `direction=`. Every direction matches within the probe's equi key
+  * only and yields nulls when nothing qualifies. */
+sealed trait AsOfDirection
+object AsOfDirection {
+  /** The LATEST state at-or-before the probe (`l.t >= r.t`) — DuckDB's
+    * ASOF LEFT JOIN and kdb `aj`. */
+  case object Backward extends AsOfDirection
+  /** The EARLIEST state at-or-after the probe (`l.t <= r.t`; a state
+    * at the probe time matches). */
+  case object Forward extends AsOfDirection
+  /** The closer of the backward and forward matches; distance ties go
+    * backward. Needs an integral time column. */
+  case object Nearest extends AsOfDirection
+}
+
 /** Native as-of join — the custom whole-operator tier (SURVEY.md §7.3):
   * a logical node, a planner strategy, and a physical merge operator,
   * registered per-session (`spark.experimental.extraStrategies`) or via
   * `SparkSessionExtensions.injectPlannerStrategy` (GraftExtensions).
   *
-  * Semantics: `l ASOF LEFT JOIN r ON l.key = r.key AND l.t >= r.t` —
-  * each left row is annotated with the value columns of the LATEST
-  * right row at-or-before its time, or nulls (same contract as
-  * `operators.AsOfJoin.joinAsOf`, DuckDB's ASOF LEFT JOIN, and kdb aj).
-  * Null keys and null times never match.
+  * Semantics: `l ASOF LEFT JOIN r ON l.key = r.key` in `direction` —
+  * each left row is annotated with the value columns of its matching
+  * right row, or nulls. Null keys and null times never match.
   *
-  * Why a physical operator when the union-and-carry rewrite already
-  * runs in one shuffle: the rewrite materializes probe∪state into one
+  * Why a physical operator when a union-and-carry rewrite with
+  * built-ins also runs in one shuffle: it materializes probe∪state into one
   * window sort, so every probe row is sorted WITH the state rows and
   * carries all state columns through the shuffle (nulls on the probe
   * side). This operator shuffles each side only once with only its own
@@ -35,7 +49,8 @@ case class AsOfJoinPlan(
     leftKeys: Seq[Attribute], rightKeys: Seq[Attribute],
     leftTime: Attribute, rightTime: Attribute,
     rightValues: Seq[Attribute],
-    tolerance: Option[Long] = None) extends BinaryNode {
+    tolerance: Option[Long] = None,
+    direction: AsOfDirection = AsOfDirection.Backward) extends BinaryNode {
   override def output: Seq[Attribute] =
     left.output ++ rightValues.map(_.withNullability(true))
   /** One output row per left row — size like the left child, not the
@@ -73,8 +88,9 @@ object PruneAsOfJoinValues
 
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case AsOfJoinPlan(l, r, lk, rk, lt, rt, vals, tol) =>
-      AsOfJoinExec(lk, rk, lt, rt, vals, tol, planLater(l), planLater(r)) :: Nil
+    case AsOfJoinPlan(l, r, lk, rk, lt, rt, vals, tol, dir) =>
+      AsOfJoinExec(lk, rk, lt, rt, vals, tol, dir,
+        planLater(l), planLater(r)) :: Nil
     case _ => Nil
   }
 }
@@ -88,11 +104,13 @@ case class AsOfJoinExec(
     leftTime: Attribute, rightTime: Attribute,
     rightValues: Seq[Attribute],
     tolerance: Option[Long],
+    direction: AsOfDirection,
     left: SparkPlan, right: SparkPlan) extends BinaryExecNode {
+  import AsOfDirection._
 
-  require(tolerance.isEmpty ||
+  require((tolerance.isEmpty && direction != Nearest) ||
     leftTime.dataType == org.apache.spark.sql.types.LongType,
-    "as-of tolerance requires an integral (epoch) time column")
+    "as-of tolerance and direction Nearest require an integral (epoch) time column")
 
   override def output: Seq[Attribute] =
     left.output ++ rightValues.map(_.withNullability(true))
@@ -140,7 +158,7 @@ case class AsOfJoinExec(
         private var rTime: InternalRow = _
         private var heldKey: InternalRow = _
         private var heldVal: InternalRow = _
-        private var heldTime: Long = 0L
+        private var heldTime: InternalRow = _
         advanceRight()
 
         private def advanceRight(): Unit = {
@@ -171,16 +189,30 @@ case class AsOfJoinExec(
               advanceRight(); continue = rRow != null
             } else if (c == 0 && timeOrd.compare(rTime, lTime) <= 0) {
               heldKey = rKey.copy(); heldVal = valProj(rRow).copy()
-              if (tolerance.isDefined) heldTime = rTime.getLong(0)
+              heldTime = rTime.copy()
               advanceRight(); continue = rRow != null
             } else continue = false
           }
-          val withinTol = tolerance.forall(t =>
-            heldKey != null && lTime.getLong(0) - heldTime <= t)
-          val vals =
-            if (heldKey != null && keyOrd.compare(heldKey, lKey) == 0 &&
-                withinTol) heldVal
-            else nullVals
+          // held: the latest same-key state at-or-before the probe;
+          // ahead: the first unconsumed row, same key ⇒ strictly later
+          val held = heldKey != null && keyOrd.compare(heldKey, lKey) == 0
+          val ahead = rRow != null && keyOrd.compare(rKey, lKey) == 0
+          val useHeld = held && (direction match {
+            case Backward => true
+            case Forward => timeOrd.compare(heldTime, lTime) == 0
+            case Nearest => !ahead || // a distance tie goes backward
+              lTime.getLong(0) - heldTime.getLong(0) <=
+                rTime.getLong(0) - lTime.getLong(0)
+          })
+          var vals: InternalRow = nullVals
+          var matchTime: InternalRow = null
+          if (useHeld) { vals = heldVal; matchTime = heldTime }
+          else if (ahead && direction != Backward) {
+            vals = valProj(rRow); matchTime = rTime
+          }
+          if (matchTime != null && tolerance.exists(t =>
+                math.abs(lTime.getLong(0) - matchTime.getLong(0)) > t))
+            vals = nullVals
           outProj(joined(l, vals))
         }
       }
@@ -205,15 +237,26 @@ object AsOfJoinNative {
       es.extraOptimizations = es.extraOptimizations :+ PruneAsOfJoinValues
   }
 
-  /** Same signature/contract as `operators.AsOfJoin.joinAsOf`, planned
-    * through [[AsOfJoinExec]]. `tolerance` (only for integral epoch
-    * time columns) bounds staleness: a state older than
-    * `leftTime - tolerance` yields nulls instead of a match — pandas
-    * merge_asof's tolerance semantics. */
+  /** The as-of join, planned through [[AsOfJoinExec]]: one output row
+    * per `left` row carrying `valueCols` of its `direction` match in
+    * `right` on equal `keys`, or nulls.
+    *
+    * @param leftTime   probe time column on `left`
+    * @param rightTime  state time column on `right` (same type)
+    * @param valueCols  columns of `right` to attach (must not clash
+    *                   with `left` column names)
+    * @param tolerance  integral epoch time only: a match farther than
+    *                   `tolerance` from the probe (|probe − match| >
+    *                   tolerance) yields nulls — pandas merge_asof's
+    *                   tolerance semantics
+    * @param direction  which state matches; [[AsOfDirection.Nearest]]
+    *                   needs an integral epoch time column
+    */
   def joinAsOf(left: DataFrame, right: DataFrame, keys: Seq[String],
                leftTime: String, rightTime: String,
                valueCols: Seq[String],
-               tolerance: Option[Long] = None): DataFrame = {
+               tolerance: Option[Long] = None,
+               direction: AsOfDirection = AsOfDirection.Backward): DataFrame = {
     require(keys.nonEmpty, "as-of join requires at least one equi key")
     val spark = left.sparkSession
     register(spark)
@@ -230,10 +273,22 @@ object AsOfJoinNative {
       plan.output.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(
           s"column $name not found in ${plan.output.map(_.name)}"))
-    val node = AsOfJoinPlan(lPlan, rPlan,
-      keys.map(attr(lPlan, _)), keys.map(attr(rPlan, _)),
-      attr(lPlan, leftTime), attr(rPlan, rightTime),
-      valueCols.map(attr(rPlan, _)), tolerance)
+    val (lKeys, rKeys) = (keys.map(attr(lPlan, _)), keys.map(attr(rPlan, _)))
+    val (lTime, rTime) = (attr(lPlan, leftTime), attr(rPlan, rightTime))
+    // both sides must hash and compare alike: the exchange would send an
+    // INT key and an equal BIGINT key to different partitions
+    (lKeys.zip(rKeys) :+ (lTime -> rTime)).foreach { case (l, r) =>
+      if (l.dataType != r.dataType) throw new IllegalArgumentException(
+        s"as-of join column types differ: left ${l.name} is " +
+        s"${l.dataType.simpleString}, right ${r.name} is " +
+        s"${r.dataType.simpleString}; cast one side")
+    }
+    val clash = valueCols.filter(left.columns.contains)
+    if (clash.nonEmpty) throw new IllegalArgumentException(
+      s"as-of value columns ${clash.mkString(", ")} are already left " +
+      "columns; rename them on one side")
+    val node = AsOfJoinPlan(lPlan, rPlan, lKeys, rKeys, lTime, rTime,
+      valueCols.map(attr(rPlan, _)), tolerance, direction)
     org.apache.spark.sql.GraftSqlBridge.ofRows(spark, node)
   }
 }

@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.{AsOfDirection, AsOfJoinNative}
+import graft.plans.AsOfDirection.{Backward, Forward, Nearest}
 import graft.retention.{EventsAdapter, Retention, StarAdapter}
 import QueryHelpers._
 
@@ -14,6 +16,28 @@ import QueryHelpers._
   * merged verbatim into [[SparkEntry.queries]]/[[SparkEntry.oracleSql]].
   */
 private[graft] object TemporalAQueries {
+
+  /** Each event against its key's checkpoints — the days holding ≥ 5
+    * of the key's events — matched in `direction`; -1 where nothing
+    * matches. The key column `key` is computed by `keyExpr`. The shared
+    * shape of the q_asof_* entries. */
+  private def asofCheckpoints(s: SparkSession, dir: String,
+      direction: AsOfDirection, key: String = "user_id",
+      keyExpr: Column = col("user_id")): DataFrame = {
+    val dayNs = 86400L * 1000 * 1000 * 1000
+    val ev = Tables.events(s, dir).select(
+      col("event_id"), keyExpr.as(key), col("ts_ns"))
+    val cp = ev
+      .withColumn("cp_ns", (col("ts_ns") / dayNs).cast("long") * dayNs)
+      .groupBy(key, "cp_ns")
+      .agg(count(lit(1)).as("cp_events"))
+      .filter(col("cp_events") >= 5)
+    AsOfJoinNative.joinAsOf(ev, cp, Seq(key), "ts_ns", "cp_ns",
+        Seq("cp_ns", "cp_events"), direction = direction)
+      .select(col("event_id"), col(key), col("ts_ns"),
+              coalesce(col("cp_ns"), lit(-1L)).as("cp_ns"),
+              coalesce(col("cp_events"), lit(-1L)).as("cp_events"))
+  }
 
   val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
 
@@ -58,64 +82,23 @@ private[graft] object TemporalAQueries {
                 col("session_window.end").as("s_end"),
                 col("n_events"))),
 
-    // ---- as-of join (operator Spark lacks; union-and-carry rewrite) ----
-    "q_asof_join" -> ((s, dir) => {
-      val dayNs = 86400L * 1000 * 1000 * 1000
-      val ev = Tables.events(s, dir).select(
-        col("event_id"), col("user_id"), col("ts_ns"))
-      val cp = ev
-        .withColumn("cp_ns", (col("ts_ns") / dayNs).cast("long") * dayNs)
-        .groupBy("user_id", "cp_ns")
-        .agg(count(lit(1)).as("cp_events"))
-        .filter(col("cp_events") >= 5)
-      graft.operators.AsOfJoin.joinAsOf(
-          ev, cp, Seq("user_id"), "ts_ns", "cp_ns", Seq("cp_ns", "cp_events"))
-        .select(col("event_id"), col("user_id"), col("ts_ns"),
-                coalesce(col("cp_ns"), lit(-1L)).as("cp_ns"),
-                coalesce(col("cp_events"), lit(-1L)).as("cp_events"))
-    }),
-
-    // same as-of contract through the NATIVE physical operator
-    // (AsOfJoinPlan → AsOfJoinStrategy → AsOfJoinExec merge)
-    "q_asof_native" -> ((s, dir) => {
-      val dayNs = 86400L * 1000 * 1000 * 1000
-      val ev = Tables.events(s, dir).select(
-        col("event_id"), col("user_id"), col("ts_ns"))
-      val cp = ev
-        .withColumn("cp_ns", (col("ts_ns") / dayNs).cast("long") * dayNs)
-        .groupBy("user_id", "cp_ns")
-        .agg(count(lit(1)).as("cp_events"))
-        .filter(col("cp_events") >= 5)
-      graft.plans.AsOfJoinNative.joinAsOf(
-          ev, cp, Seq("user_id"), "ts_ns", "cp_ns", Seq("cp_ns", "cp_events"))
-        .select(col("event_id"), col("user_id"), col("ts_ns"),
-                coalesce(col("cp_ns"), lit(-1L)).as("cp_ns"),
-                coalesce(col("cp_events"), lit(-1L)).as("cp_events"))
-    }),
+    // ---- as-of join (an operator Spark lacks): each event against
+    //      its user's latest busy-day checkpoint, through the native
+    //      merge (AsOfJoinPlan → AsOfJoinStrategy → AsOfJoinExec) ----
+    "q_asof_join" -> ((s, dir) =>
+      asofCheckpoints(s, dir, Backward)),
+    // kept as its own entry for the bench history; now the same plan as q_asof_join
+    "q_asof_native" -> ((s, dir) =>
+      asofCheckpoints(s, dir, Backward)),
 
     // the native operator under deliberate key skew: collapsing even
     // user_ids onto one key puts ~half of BOTH sides on a single key —
     // the hot-partition shape the O(1)-state merge must stream through
     // (the memory contract itself is spill-asserted in
     // AsOfJoinNativeSpec; this entry pins correctness + benches it)
-    "q_asof_skew" -> ((s, dir) => {
-      val dayNs = 86400L * 1000 * 1000 * 1000
-      val ev = Tables.events(s, dir).select(
-        col("event_id"),
-        when(col("user_id") % 2 === 0, lit(0L))
-          .otherwise(col("user_id")).as("sk"),
-        col("ts_ns"))
-      val cp = ev
-        .withColumn("cp_ns", (col("ts_ns") / dayNs).cast("long") * dayNs)
-        .groupBy("sk", "cp_ns")
-        .agg(count(lit(1)).as("cp_events"))
-        .filter(col("cp_events") >= 5)
-      graft.plans.AsOfJoinNative.joinAsOf(
-          ev, cp, Seq("sk"), "ts_ns", "cp_ns", Seq("cp_ns", "cp_events"))
-        .select(col("event_id"), col("sk"), col("ts_ns"),
-                coalesce(col("cp_ns"), lit(-1L)).as("cp_ns"),
-                coalesce(col("cp_events"), lit(-1L)).as("cp_events"))
-    }),
+    "q_asof_skew" -> ((s, dir) =>
+      asofCheckpoints(s, dir, Backward, "sk",
+        when(col("user_id") % 2 === 0, lit(0L)).otherwise(col("user_id")))),
 
     // ---- ordered-step funnel over the event stream ----
     "q_funnel" -> ((s, dir) =>
@@ -139,7 +122,7 @@ private[graft] object TemporalAQueries {
           "event_id")
         .select(col("user_id"), col("valid_from"), col("state"),
                 col("version"))
-      graft.plans.AsOfJoinNative.joinAsOf(
+      AsOfJoinNative.joinAsOf(
           ev, versions, Seq("user_id"), "ts_ns", "valid_from",
           Seq("state", "version"))
         .select(col("event_id"), col("user_id"), col("ts_ns"),
@@ -230,36 +213,10 @@ private[graft] object TemporalAQueries {
     // ---- as-of join directions (pandas merge_asof parity): the next
     //      checkpoint at-or-after each event, and the closer of the
     //      two — same data shape as q_asof_join ----
-    "q_asof_fwd" -> ((s, dir) => {
-      val dayNs = 86400L * 1000 * 1000 * 1000
-      val ev = Tables.events(s, dir).select(
-        col("event_id"), col("user_id"), col("ts_ns"))
-      val cp = ev
-        .withColumn("cp_ns", (col("ts_ns") / dayNs).cast("long") * dayNs)
-        .groupBy("user_id", "cp_ns")
-        .agg(count(lit(1)).as("cp_events"))
-        .filter(col("cp_events") >= 5)
-      graft.operators.AsOfJoin.joinAsOfForward(
-          ev, cp, Seq("user_id"), "ts_ns", "cp_ns", Seq("cp_ns", "cp_events"))
-        .select(col("event_id"), col("user_id"), col("ts_ns"),
-                coalesce(col("cp_ns"), lit(-1L)).as("cp_ns"),
-                coalesce(col("cp_events"), lit(-1L)).as("cp_events"))
-    }),
-    "q_asof_nearest" -> ((s, dir) => {
-      val dayNs = 86400L * 1000 * 1000 * 1000
-      val ev = Tables.events(s, dir).select(
-        col("event_id"), col("user_id"), col("ts_ns"))
-      val cp = ev
-        .withColumn("cp_ns", (col("ts_ns") / dayNs).cast("long") * dayNs)
-        .groupBy("user_id", "cp_ns")
-        .agg(count(lit(1)).as("cp_events"))
-        .filter(col("cp_events") >= 5)
-      graft.operators.AsOfJoin.joinAsOfNearest(
-          ev, cp, Seq("user_id"), "ts_ns", "cp_ns", Seq("cp_ns", "cp_events"))
-        .select(col("event_id"), col("user_id"), col("ts_ns"),
-                coalesce(col("cp_ns"), lit(-1L)).as("cp_ns"),
-                coalesce(col("cp_events"), lit(-1L)).as("cp_events"))
-    }),
+    "q_asof_fwd" -> ((s, dir) =>
+      asofCheckpoints(s, dir, Forward)),
+    "q_asof_nearest" -> ((s, dir) =>
+      asofCheckpoints(s, dir, Nearest)),
 
     // ---- binned interval-overlap join: the equi-join rewrite of the
     //      interval theta-join (no BroadcastNestedLoopJoin) — which

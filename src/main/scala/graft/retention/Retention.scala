@@ -2,7 +2,7 @@ package graft.retention
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -57,8 +57,6 @@ case class RetentionConfig(
   */
 object Retention {
 
-  private def monthStart(asOf: LocalDate): LocalDate = asOf.withDayOfMonth(1)
-
   /** Persons with a household — the shared person projection. NO
     * explicit repartition here, deliberately: the two consumers want
     * different physical placements (the scaffold's distinct shuffles
@@ -82,8 +80,7 @@ object Retention {
                           cfg: RetentionConfig): DataFrame = {
     val scanStart = java.sql.Date.valueOf(cfg.asOf.minusYears(cfg.scanYears.toLong))
     val asOfDate = java.sql.Date.valueOf(cfg.asOf)
-    val p = persons.filter(col("household_id").isNotNull)
-      .select("person_id", "household_id")
+    val p = personsByHousehold(persons)
     val e = encounters
       .filter(col("admit_date").between(lit(scanStart), lit(asOfDate)))
       .select("person_id", "admit_date")
@@ -96,23 +93,6 @@ object Retention {
     e.join(p, "person_id")
       .select("household_id", "admit_date")
       .repartition(col("household_id"))
-      .distinct()
-  }
-
-  /** Months in which a household is retained: the reference's self
-    * band-join J3 (:529-532) replaced by a per-household `lag` — with
-    * distinct dates, "exists a strictly earlier admit within N days" is
-    * exactly "the nearest earlier admit is within N days". One window
-    * pass, zero extra shuffles, instead of a self-join that at 100 TB
-    * would re-shuffle and explode on dense households.
-    */
-  private[retention] def retainedMonths(admits: DataFrame, cfg: RetentionConfig): DataFrame = {
-    val w = Window.partitionBy("household_id").orderBy("admit_date")
-    admits
-      .withColumn("_prev", lag(col("admit_date"), 1).over(w))
-      .filter(col("_prev") >= date_add(col("admit_date"), -cfg.lookbackDays))
-      .select(col("household_id"),
-              trunc(col("admit_date"), "MM").as("start_of_month"))
       .distinct()
   }
 
@@ -131,7 +111,11 @@ object Retention {
     * left-join that set (both sides hash-clustered on household_id —
     * one aligned shuffle each); then the 49-row broadcast spine
     * multiplies rows and `array_contains` supplies the flag
-    * (null set ⇒ false via coalesce). Compared to the direct
+    * (null set ⇒ false via coalesce). A month is retained by the
+    * reference's self band-join J3 (:529-532) as a per-household `lag`:
+    * with distinct dates, "exists a strictly earlier admit within N
+    * days" is exactly "the nearest earlier admit is within N days" —
+    * one window pass instead of a self-join. Compared to the direct
     * scaffold-left-join transcription this consumes the admits subtree
     * once instead of twice (households branch + retained branch were
     * two physical copies of the same scan/join) — at 100 TB that
@@ -212,8 +196,7 @@ object Retention {
       .select("household_id").distinct()
     val gteMs = cfg.asOf.withDayOfMonth(1).minusYears(cfg.notRetainedPastYears.toLong)
     val lteMs = cfg.asOf.withDayOfMonth(1).plusYears(cfg.notRetainedFutureYears.toLong)
-    persons.filter(col("household_id").isNotNull)
-      .select("person_id", "household_id")
+    personsByHousehold(persons)
       .join(covered, Seq("household_id"), "left_anti")
       .select(
         col("household_id"),

@@ -4,33 +4,54 @@ import scala.util.Random
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.AsOfJoin
-import graft.plans.{AsOfJoinExec, AsOfJoinNative}
+import graft.plans.AsOfDirection.{Backward, Forward, Nearest}
+import graft.plans.{AsOfDirection, AsOfJoinNative}
 
-/** The custom physical as-of join vs the union-and-carry rewrite — two
-  * independent formulations of the same contract, compared on random
-  * data (plus plan-shape and null-semantics pins). */
+/** The custom physical as-of join vs a plain-Scala reference
+  * ([[AsOfReference]]) — two independent formulations of the same
+  * contract, compared on random data in every direction (plus
+  * plan-shape, null-semantics and input-validation pins). */
 class AsOfJoinNativeSpec extends SparkSpec {
   import spark.implicits._
 
-  test("native operator matches the union-and-carry rewrite on random data") {
+  private type Probe = (Option[Long], Option[Long], Int)
+  private type State = (Option[Long], Option[Long], Long)
+  private val directions = Seq(Backward, Forward, Nearest)
+
+  /** Native join of probes (k, t, payload) against states (k, st, sv),
+    * checked row for row against the reference. */
+  private def assertMatchesReference(probes: Seq[Probe], states: Seq[State],
+      direction: AsOfDirection, tolerance: Option[Long]): Unit = {
+    val got = AsOfJoinNative.joinAsOf(
+        probes.toDF("k", "t", "payload"), states.toDF("k", "st", "sv"),
+        Seq("k"), "t", "st", Seq("st", "sv"), tolerance, direction)
+      .as[(Option[Long], Option[Long], Int, Option[Long], Option[Long])]
+      .collect().toSeq
+    val ref = new AsOfReference(states)
+    val want = probes.map { case (k, t, p) =>
+      val m = ref(k, t, direction, tolerance)
+      (k, t, p, m.map(_._1), m.map(_._2))
+    }
+    // one output row per probe row, each with its reference match
+    assert(got.sortBy(_.toString) == want.sortBy(_.toString),
+      s"direction $direction, tolerance $tolerance")
+  }
+
+  test("every direction matches a brute-force reference on random data") {
     val rnd = new Random(42)
+    def maybe(x: Int): Option[Long] =
+      if (rnd.nextInt(20) == 0) None else Some(x.toLong)
+    // probe keys 20..29 have no state; ~5% null keys and times per side
     val probes = (1 to 400).map(_ =>
-      (rnd.nextInt(20).toLong, rnd.nextInt(1000).toLong, rnd.nextInt()))
-      .toDF("k", "t", "payload")
+      (maybe(rnd.nextInt(30)), maybe(rnd.nextInt(1000)), rnd.nextInt()))
     val states = (1 to 150).map(_ =>
-      (rnd.nextInt(25).toLong, rnd.nextInt(1000).toLong,
-       rnd.nextInt(100).toLong)).toDF("k", "st", "sv")
-      .dropDuplicates("k", "st") // unique (key, time) ⇒ deterministic ties
-    val native = AsOfJoinNative.joinAsOf(
-        probes, states, Seq("k"), "t", "st", Seq("st", "sv"))
-      .collect().map(_.toSeq).toSeq
-    val rewrite = AsOfJoin.joinAsOf(
-        probes, states, Seq("k"), "t", "st", Seq("st", "sv"))
-      .select("k", "t", "payload", "st", "sv")
-      .collect().map(_.toSeq).toSeq
-    assert(native.sortBy(_.toString) == rewrite.sortBy(_.toString))
-    assert(native.size == 400) // one output row per probe row
+      (maybe(rnd.nextInt(20)), maybe(rnd.nextInt(1000)),
+       rnd.nextInt(100).toLong))
+      .distinctBy(s => (s._1, s._2)) // unique (key, time) ⇒ deterministic ties
+    (directions.map(_ -> None) :+ (Forward -> Some(40L))).foreach {
+      case (d, tol) => assertMatchesReference(probes, states, d, tol)
+    }
+    directions.foreach(assertMatchesReference(probes, Seq.empty, _, None))
   }
 
   test("null keys and null times never match; missing state gives nulls") {
@@ -70,27 +91,49 @@ class AsOfJoinNativeSpec extends SparkSpec {
     assert(all.forall(_._3.isDefined))
   }
 
-  test("tolerance differentially matches rewrite + post-filter on random data") {
+  test("tolerance matches the brute-force reference in every direction") {
     val rnd = new Random(99)
     val probes = (1 to 300).map(_ =>
-      (rnd.nextInt(15).toLong, rnd.nextInt(1000).toLong)).toDF("k", "t")
+      (Option(rnd.nextInt(15).toLong), Option(rnd.nextInt(1000).toLong), 0))
     val states = (1 to 120).map(_ =>
-      (rnd.nextInt(15).toLong, rnd.nextInt(1000).toLong,
-       rnd.nextInt(100).toLong)).toDF("k", "st", "sv")
-      .dropDuplicates("k", "st")
-    val tol = 75L
-    val native = AsOfJoinNative.joinAsOf(
-        probes, states, Seq("k"), "t", "st", Seq("st", "sv"), Some(tol))
-      .select("k", "t", "st", "sv")
-      .collect().map(_.toSeq).toSeq.sortBy(_.toString)
-    // independent formulation: plain as-of, then null out stale matches
-    val viaRewrite = AsOfJoin.joinAsOf(
-        probes, states, Seq("k"), "t", "st", Seq("st", "sv"))
-      .select(col("k"), col("t"),
-              when(col("t") - col("st") <= tol, col("st")).as("st"),
-              when(col("t") - col("st") <= tol, col("sv")).as("sv"))
-      .collect().map(_.toSeq).toSeq.sortBy(_.toString)
-    assert(native == viaRewrite)
+      (Option(rnd.nextInt(15).toLong), Option(rnd.nextInt(1000).toLong),
+       rnd.nextInt(100).toLong))
+      .distinctBy(s => (s._1, s._2))
+    for (d <- directions; tol <- Seq(0L, 75L))
+      assertMatchesReference(probes, states, d, Some(tol))
+  }
+
+  test("mismatched key or time types fail fast, naming both types") {
+    val states = Seq((1L, 5L, "a")).toDF("k", "st", "sv")
+    def join(probes: org.apache.spark.sql.DataFrame) = AsOfJoinNative.joinAsOf(
+      probes, states, Seq("k"), "t", "st", Seq("sv"))
+    // an INT key and an equal BIGINT key hash to different partitions
+    val byKey = intercept[IllegalArgumentException](
+      join(Seq((1, 10L)).toDF("k", "t")))
+    assert(byKey.getMessage.contains("left k is int, right k is bigint"),
+      byKey.getMessage)
+    assert(byKey.getMessage.contains("cast one side"))
+    val byTime = intercept[IllegalArgumentException](
+      join(Seq((1L, 10)).toDF("k", "t")))
+    assert(byTime.getMessage.contains("left t is int, right st is bigint"),
+      byTime.getMessage)
+    // cast one side and every probe finds its state, across partitions
+    val manyStates = (1L to 2000L).map(k => (k, 5L, k)).toDF("k", "st", "sv")
+    val matched = AsOfJoinNative.joinAsOf(
+        (1 to 2000).map(k => (k, 10L)).toDF("k", "t")
+          .withColumn("k", col("k").cast("long")),
+        manyStates, Seq("k"), "t", "st", Seq("sv"))
+      .filter(col("sv") === col("k")).count()
+    assert(matched == 2000)
+  }
+
+  test("value columns that clash with left columns fail fast") {
+    val probes = Seq((1L, 10L, 7L)).toDF("k", "t", "sv")
+    val states = Seq((1L, 5L, 3L)).toDF("k", "st", "sv")
+    val e = intercept[IllegalArgumentException](AsOfJoinNative.joinAsOf(
+      probes, states, Seq("k"), "t", "st", Seq("st", "sv")))
+    assert(e.getMessage.contains("as-of value columns sv are already left columns"),
+      e.getMessage)
   }
 
   test("unused value columns are pruned through the custom node") {
@@ -109,10 +152,10 @@ class AsOfJoinNativeSpec extends SparkSpec {
 
   test("extreme key skew (60% of both sides on one key) streams with zero spill") {
     // One key holds 60% of BOTH sides — the shape that makes a buffering
-    // join (or the union-and-carry rewrite's window sort) hold the whole
-    // hot key in memory. The merge exec holds O(1) state per partition
-    // (one copied value row), so the hot partition must stream: total
-    // spill across the native run is asserted to be exactly zero.
+    // join (or a union-and-carry window sort) hold the whole hot key in
+    // memory. The merge exec holds O(1) state per partition (one copied
+    // value row), so the hot partition must stream: total spill across
+    // the native runs, one per direction, is asserted to be exactly zero.
     val sc = spark.sparkContext
     val n = 200000L
     def skewKey = when(col("id") % 5 < 3, lit(0L))
@@ -126,9 +169,15 @@ class AsOfJoinNativeSpec extends SparkSpec {
     def fingerprint(df: org.apache.spark.sql.DataFrame): Seq[Any] =
       df.agg(count(lit(1)), count(col("sv")), sum(col("sv")), sum(col("st")))
         .collect()(0).toSeq
-    // independent formulation first, listener-free
-    val viaRewrite = fingerprint(AsOfJoin.joinAsOf(
-      probes, states, Seq("k"), "t", "st", Seq("st", "sv")))
+    // the reference's fingerprints first, listener-free
+    val probeRows = probes.select("k", "t").as[(Long, Long)].collect()
+    val ref = new AsOfReference(states.select("k", "st", "sv")
+      .as[(Long, Long, Long)].collect().toSeq
+      .map { case (k, st, sv) => (Option(k), Option(st), sv) })
+    val want = directions.map { d =>
+      val ms = probeRows.flatMap { case (k, t) => ref(Some(k), Some(t), d) }
+      Seq[Any](n, ms.length.toLong, ms.map(_._2).sum, ms.map(_._1).sum)
+    }
     val spilled = new java.util.concurrent.atomic.AtomicLong()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(
@@ -139,11 +188,12 @@ class AsOfJoinNativeSpec extends SparkSpec {
     }
     sc.addSparkListener(listener)
     try {
-      val native = fingerprint(AsOfJoinNative.joinAsOf(
-        probes, states, Seq("k"), "t", "st", Seq("st", "sv")))
+      directions.zip(want).foreach { case (d, w) =>
+        val native = fingerprint(AsOfJoinNative.joinAsOf(
+          probes, states, Seq("k"), "t", "st", Seq("st", "sv"), direction = d))
+        assert(native == w, s"skewed $d differential: $native vs $w")
+      }
       org.apache.spark.GraftTestBridge.waitUntilListenerBusEmpty(sc)
-      assert(native == viaRewrite, s"skewed differential: $native vs $viaRewrite")
-      assert(native.head == n) // one output row per probe row
       assert(spilled.get() == 0L,
         s"skewed as-of merge spilled ${spilled.get()} bytes")
     } finally sc.removeSparkListener(listener)

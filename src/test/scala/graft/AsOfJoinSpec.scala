@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.AsOfJoin
+import graft.plans.AsOfDirection.{Backward, Forward, Nearest}
+import graft.plans.AsOfJoinNative
 
 class AsOfJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -10,7 +11,8 @@ class AsOfJoinSpec extends SparkSpec {
       .toDF("k", "t")
     val states = Seq((1L, 10L, "a"), (1L, 15L, "b"), (2L, 200L, "z"))
       .toDF("k", "st", "v")
-    val got = AsOfJoin.joinAsOf(probes, states, Seq("k"), "t", "st", Seq("v"))
+    val got = AsOfJoinNative.joinAsOf(probes, states, Seq("k"), "t", "st",
+        Seq("v"), direction = Backward)
       .select("k", "t", "v").as[(Long, Long, Option[String])]
       .collect().toSet
     assert(got == Set(
@@ -25,8 +27,8 @@ class AsOfJoinSpec extends SparkSpec {
       .toDF("k", "t")
     val states = Seq((1L, 10L, "a"), (1L, 15L, "b"), (2L, 200L, "z"))
       .toDF("k", "st", "v")
-    val got = AsOfJoin.joinAsOfForward(
-        probes, states, Seq("k"), "t", "st", Seq("v"))
+    val got = AsOfJoinNative.joinAsOf(
+        probes, states, Seq("k"), "t", "st", Seq("v"), direction = Forward)
       .select("k", "t", "v").as[(Long, Long, Option[String])]
       .collect().toSet
     assert(got == Set(
@@ -43,20 +45,15 @@ class AsOfJoinSpec extends SparkSpec {
     val states = (1 to 80).map(i => ((rnd.nextInt(5) + 1).toLong,
       rnd.nextInt(1000).toLong, i.toLong))
       .groupBy(s => (s._1, s._2)).map(_._2.head).toSeq // unique (k, st)
-    val got = AsOfJoin.joinAsOfNearest(
+    val got = AsOfJoinNative.joinAsOf(
         probes.toDF("k", "t"), states.toDF("k", "st", "v"),
-        Seq("k"), "t", "st", Seq("st", "v"))
+        Seq("k"), "t", "st", Seq("st", "v"), direction = Nearest)
       .select("k", "t", "st").as[(Long, Long, Option[Long])]
       .collect().map { case (k, t, st) => ((k, t), st) }.toMap
+    val ref = new AsOfReference(states.map { case (k, st, v) =>
+      (Option(k), Option(st), v) })
     probes.foreach { case (k, t) =>
-      val cand = states.filter(_._1 == k)
-      val want = if (cand.isEmpty) None else {
-        val best = cand.minBy { case (_, st, _) =>
-          // distance, tie → backward (at-or-before beats after)
-          (math.abs(st - t), if (st <= t) 0 else 1)
-        }
-        Some(best._2)
-      }
+      val want = ref(Some(k), Some(t), Nearest).map(_._1)
       assert(got((k, t)) == want, s"probe ($k, $t)")
     }
   }

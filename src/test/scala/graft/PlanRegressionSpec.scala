@@ -243,4 +243,16 @@ class PlanRegressionSpec extends SparkSpec {
         s"$q re-derives edges in its final plan:\n" + p)
     }
   }
+
+  test("count() of every as-of entry still plans the merge exec") {
+    // the benchmark times `.count()`: a Window/Union the optimizer can
+    // prune there would time a bare events scan instead of the join
+    for (q <- Seq("q_asof_join", "q_asof_native", "q_asof_skew",
+                  "q_asof_fwd", "q_asof_nearest", "q_temporal_join")) {
+      val p = SparkEntry.queries(q)(spark, dir)
+        .groupBy().count().queryExecution.executedPlan.toString
+      assert(p.contains("AsOfJoin ["), s"$q count() lost the join:\n" + p)
+      assert(!p.contains("Union"), s"$q plans a union:\n" + p)
+    }
+  }
 }
