@@ -215,6 +215,14 @@ private[graft] object QueryHelpers {
       graft.operators.LoopCheckpoint(graft.functions.InvertedIndex.postings(
         Tables.load(s, dir, "documents"), "doc_id", "text")))
 
+  /** Root of every mutable fixture (stores, indexes, media corpora):
+    * `target/graft_fixtures` under the JVM's working directory,
+    * resolved once per JVM, so each checkout keeps its own. */
+  lazy val ScratchRoot: String =
+    java.nio.file.Paths.get("target", "graft_fixtures").toAbsolutePath.toString
+
+  private def sanitized(name: String): String = name.replaceAll("[^A-Za-z0-9]+", "_")
+
   /** Scratch path for per-(session, sf dir) mutable fixtures (stores,
     * indexes): keyed on the SANITIZED dir string (hashCode alone is
     * 32-bit and collision-prone) plus the application id, so two
@@ -222,9 +230,26 @@ private[graft] object QueryHelpers {
     * single-writer contracts (KeyedUpsert) depend on it. The one
     * definition of the rule; the store/index builders all route here. */
   def scratchPathFor(s: SparkSession, dir: String, prefix: String): String =
-    "/root/repo/target/graft_fixtures/" + prefix + "_" +
-      dir.replaceAll("[^A-Za-z0-9]+", "_").takeRight(60) + "_" +
-      s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]+", "_")
+    scratchPath(s.sparkContext.applicationId, dir, prefix)
+  def scratchPath(appId: String, dir: String, prefix: String): String =
+    s"$ScratchRoot/${prefix}_${sanitized(dir).takeRight(60)}_${sanitized(appId)}"
+
+  /** Where the shared multimodal fixtures land, per application like
+    * the stores: the DuckDB oracle reads the IDENTICAL payload bytes
+    * Spark processes (testdata is read-only), and absolute paths keep
+    * both engines agreeing regardless of cwd. */
+  def mediaCorpusPath(appId: String): String =
+    s"$ScratchRoot/media_corpus_${sanitized(appId)}.parquet"
+  def pngCorpusPath(appId: String): String =
+    s"$ScratchRoot/png_corpus_${sanitized(appId)}.parquet"
+
+  /** The application whose corpora an oracle string names: the active
+    * (or default) session's, which is the one that ran the Spark side
+    * (Verify renders the oracle after the queries). With no session
+    * there is no corpus, and the path names none. */
+  def currentAppId: String =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold("no_application")(_.sparkContext.applicationId)
 
   private val impactIdx = scala.collection.concurrent.TrieMap[
     (SparkSession, String), String]()
@@ -283,46 +308,34 @@ private[graft] object QueryHelpers {
     }
   }
 
-  /** Shared real-format media fixture for the q_media_* family: written
-    * once per JVM (the corpus is seeded-deterministic, so the write is
-    * idempotent — the guard just avoids 5 redundant rewrites when the
-    * whole family runs in one session). */
-  @volatile var mediaCorpusWritten = false
+  /** Shared real-format media fixtures for the q_media_* family,
+    * written once per application: each corpus is seeded-deterministic,
+    * so the write is idempotent, and the guard just avoids redundant
+    * rewrites when the whole family runs in one session. The second
+    * check under the lock keeps two concurrent first callers from both
+    * overwriting the same path. */
+  private val corporaWritten =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private def writtenOnce(path: String)(write: String => Unit): String = {
+    if (!corporaWritten.contains(path)) synchronized {
+      if (!corporaWritten.contains(path)) { write(path); corporaWritten.add(path) }
+    }
+    path
+  }
+
   def mediaCorpus(s: SparkSession)
-      : org.apache.spark.sql.Dataset[graft.multimodal.MediaRecord] =
-    if (mediaCorpusWritten) {
-      import s.implicits._
-      s.read.parquet(graft.multimodal.Multimodal.CorpusPath)
-        .as[graft.multimodal.MediaRecord]
-    } else synchronized {
-      // Second check under the lock: without it two concurrent first
-      // callers would both run the parquet overwrite on the same path.
-      if (mediaCorpusWritten) {
-        import s.implicits._
-        s.read.parquet(graft.multimodal.Multimodal.CorpusPath)
-          .as[graft.multimodal.MediaRecord]
-      } else {
-        val ds = graft.multimodal.Multimodal.corpusParquet(s, 200)
-        mediaCorpusWritten = true
-        ds
-      }
-    }
+      : org.apache.spark.sql.Dataset[graft.multimodal.MediaRecord] = {
+    import s.implicits._
+    val path = writtenOnce(mediaCorpusPath(s.sparkContext.applicationId))(
+      graft.multimodal.Multimodal.corpusParquet(s, 200, _))
+    s.read.parquet(path).as[graft.multimodal.MediaRecord]
+  }
 
-
-  /** Shared PNG dual-encoding fixture (same once-per-JVM guard shape
-    * as [[mediaCorpus]], second check under the lock). */
-  @volatile private var pngCorpusWritten = false
+  /** Shared PNG dual-encoding fixture (same once-per-application guard
+    * as [[mediaCorpus]]). */
   def pngCorpus(s: SparkSession): DataFrame =
-    if (pngCorpusWritten) s.read.parquet(graft.multimodal.Multimodal.PngCorpusPath)
-    else synchronized {
-      if (pngCorpusWritten)
-        s.read.parquet(graft.multimodal.Multimodal.PngCorpusPath)
-      else {
-        val df = graft.multimodal.Multimodal.pngCorpusParquet(s, 60)
-        pngCorpusWritten = true
-        df
-      }
-    }
+    s.read.parquet(writtenOnce(pngCorpusPath(s.sparkContext.applicationId))(
+      graft.multimodal.Multimodal.pngCorpusParquet(s, 60, _)))
 
   /** DuckDB-dialect oracles. The retention CTE is split into a
     * source-specific head (anchor/persons/admits) and a shared,

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every query is an operator from SURVEY.md §2 (or an additive
   * LLM-pipeline operator) expressed Spark-first; `oracleSql` holds the
@@ -23,7 +23,8 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     QueryHelpers.retentionFlagship(spark, "/root/testdata/sf0.001")
 
-  private val registries: Seq[(Seq[(String, (SparkSession, String) => DataFrame)],
+  // a def: MediaQueries renders its oracle for the running application
+  private def registries: Seq[(Seq[(String, (SparkSession, String) => DataFrame)],
                                Seq[(String, String)])] = Seq(
     (RetentionQueries.queries, RetentionQueries.oracleSql), (CoreQueries.queries, CoreQueries.oracleSql), (GovernanceQueries.queries, GovernanceQueries.oracleSql), (TemporalAQueries.queries, TemporalAQueries.oracleSql), (TemporalBQueries.queries, TemporalBQueries.oracleSql), (TemporalCQueries.queries, TemporalCQueries.oracleSql),
     (DedupQueries.queries, DedupQueries.oracleSql), (SimilarityQueries.queries, SimilarityQueries.oracleSql), (TextQueries.queries, TextQueries.oracleSql), (RetrievalQueries.queries, RetrievalQueries.oracleSql), (CorpusQueries.queries, CorpusQueries.oracleSql),
@@ -39,7 +40,7 @@ object SparkEntry {
         all.groupBy(_._1).collect { case (k, v) if v.size > 1 => k }.mkString(", "))
     all
   }
-  private lazy val oracleSeq = {
+  private def oracleSeq = {
     val all = registries.flatMap(_._2)
     require(all.map(_._1).distinct.size == all.size,
       "duplicate oracle name across registries: " +

@@ -111,17 +111,12 @@ object Multimodal {
     }
   }
 
-  /** Where the shared multimodal fixture lands so the DuckDB oracle can
-    * read the IDENTICAL payload bytes Spark processes (testdata is
-    * read-only; target/ is the repo's gitignored scratch space, and an
-    * absolute path keeps Spark and DuckDB agreeing regardless of cwd). */
-  val CorpusPath = "/root/repo/target/graft_fixtures/media_corpus.parquet"
-
-  /** Materialize the corpus as parquet and read it back — both engines
-    * consume the same file, so the comparison checks the decode math,
-    * not corpus generation. */
+  /** Materialize the corpus as parquet at `path` and read it back —
+    * both engines consume the same file, so the comparison checks the
+    * decode math, not corpus generation (the registry's fixture lives
+    * at `QueryHelpers.mediaCorpusPath`). */
   def corpusParquet(spark: SparkSession, n: Int,
-                    path: String = CorpusPath): Dataset[MediaRecord] = {
+                    path: String): Dataset[MediaRecord] = {
     import spark.implicits._
     syntheticCorpus(spark, n).coalesce(1)
       .write.mode("overwrite").parquet(path)
@@ -130,11 +125,6 @@ object Multimodal {
 
   // ---- compressed tier (PNG via the JDK's ImageIO) ----
 
-  /** Where the PNG fixture lands (same scratch-space contract as
-    * [[CorpusPath]]). */
-  val PngCorpusPath =
-    "/root/repo/target/graft_fixtures/png_corpus.parquet"
-
   /** Deterministic dual-encoding fixture: the SAME pixels as both a
     * real PNG (lossless, via ImageIO) and a 24-bit BMP (our codec).
     * DuckDB cannot inflate PNG, so the cross-engine check goes through
@@ -142,7 +132,7 @@ object Multimodal {
     * oracle reads the independently-encoded BMP column. Byte equality
     * proves the PNG decode exact. */
   def pngCorpusParquet(spark: SparkSession, n: Int,
-                       path: String = PngCorpusPath): DataFrame = {
+                       path: String): DataFrame = {
     import spark.implicits._
     spark.range(n.toLong).map { i =>
       val w = 8 + (i * 7 % 13).toInt

@@ -53,9 +53,16 @@ private[graft] object MediaQueries {
       graft.multimodal.Multimodal.pngToBmpHex(pngCorpus(s))),
   )
 
-  val oracleSql: Seq[(String, String)] = Seq(
+  /** Rendered for the running application: the oracle reads the
+    * corpora its Spark side wrote. */
+  def oracleSql: Seq[(String, String)] = {
+    val app = currentAppId
+    oracleOver(mediaCorpusPath(app), pngCorpusPath(app))
+  }
+
+  private def oracleOver(corpus: String, png: String): Seq[(String, String)] = Seq(
     // The q_media_* family reads the SAME parquet fixture the Spark
-    // side materializes (Multimodal.CorpusPath) and re-derives the
+    // side materializes (QueryHelpers.mediaCorpus) and re-derives the
     // decode results from the payload bytes: hex(bytes) → a byte list
     // via strpos over the hex alphabet (integer-exact in both
     // engines), then fixed-offset BMP/WAV header+sample arithmetic.
@@ -64,7 +71,7 @@ private[graft] object MediaQueries {
       WITH m AS (
         SELECT media_id, kind, format, width AS meta_w, height AS meta_h,
                octet_length(bytes)::BIGINT AS n_bytes, hex(bytes) AS h
-        FROM read_parquet('${graft.multimodal.Multimodal.CorpusPath}/*.parquet')
+        FROM read_parquet('$corpus/*.parquet')
       ),
       b AS (
         SELECT *, list_transform(range(n_bytes), i ->
@@ -108,7 +115,7 @@ private[graft] object MediaQueries {
       WITH m AS (
         SELECT media_id, octet_length(bytes)::BIGINT AS n_bytes,
                hex(bytes) AS h
-        FROM read_parquet('${graft.multimodal.Multimodal.CorpusPath}/*.parquet')
+        FROM read_parquet('$corpus/*.parquet')
         WHERE kind = 'image'
       ),
       b AS (
@@ -148,7 +155,7 @@ private[graft] object MediaQueries {
       WITH m AS (
         SELECT media_id, octet_length(bytes)::BIGINT AS n_bytes,
                hex(bytes) AS h
-        FROM read_parquet('${graft.multimodal.Multimodal.CorpusPath}/*.parquet')
+        FROM read_parquet('$corpus/*.parquet')
         WHERE kind = 'audio'
       ),
       b AS (
@@ -186,7 +193,7 @@ private[graft] object MediaQueries {
       WITH m AS (
         SELECT media_id, octet_length(bytes)::BIGINT AS n_bytes,
                hex(bytes) AS h
-        FROM read_parquet('${graft.multimodal.Multimodal.CorpusPath}/*.parquet')
+        FROM read_parquet('$corpus/*.parquet')
         WHERE kind = 'video'
       ),
       b AS (
@@ -230,7 +237,7 @@ private[graft] object MediaQueries {
       WITH m AS (
         SELECT media_id, octet_length(bytes)::BIGINT AS n_bytes,
                hex(bytes) AS h
-        FROM read_parquet('${graft.multimodal.Multimodal.CorpusPath}/*.parquet')
+        FROM read_parquet('$corpus/*.parquet')
         WHERE kind = 'image'
       ),
       b AS (
@@ -265,7 +272,7 @@ private[graft] object MediaQueries {
     """,
     "q_media_png_decode" -> s"""
       SELECT media_id, hex(bmp_bytes) AS bmp_hex
-      FROM read_parquet('${graft.multimodal.Multimodal.PngCorpusPath}/*.parquet')
+      FROM read_parquet('$png/*.parquet')
     """,
   )
 }

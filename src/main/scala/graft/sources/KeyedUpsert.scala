@@ -2,8 +2,10 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 
 /** Keyed upsert sink over parquet — the relational stand-in for the
@@ -20,16 +22,19 @@ import org.apache.spark.sql.functions._
   * read.
   *
   * Write design: `updates` is evaluated exactly ONCE per upsert — it
-  * is written, bucketed, to a sibling `<table>_graft_delta` directory,
-  * and everything the upsert needs is read back from that one durable
-  * copy: the touched-bucket set (≤ numBuckets ints, collected to the
-  * driver and applied as a literal partition filter, so the survivor
-  * scan lists and reads only the touched bucket directories), the
-  * anti-join keys and the new rows. A nondeterministic or
-  * re-evaluation-unstable `updates` therefore cannot stage a bucket
-  * whose survivors were never read. The merged buckets are written
-  * clustered by bucket, so each touched bucket becomes one file (more
-  * only past `spark.sql.adaptive.advisoryPartitionSizeInBytes`); an
+  * is written, bucketed, to a sibling `<table>_graft_delta` directory.
+  * That one write also yields the touched-bucket set (≤ numBuckets
+  * ints), as a `collect_set` observed on it: no second pass over the
+  * delta. The set is applied as a literal partition filter, so the
+  * survivor scan reads only the touched bucket directories. The
+  * anti-join keys and the new rows are read back from the durable
+  * copy, with the schema it was written with (no footer job). A
+  * nondeterministic or re-evaluation-unstable `updates` therefore
+  * cannot stage a bucket whose survivors were never read, and the
+  * swap refuses any staged bucket outside the observed set. The merged
+  * buckets are written clustered by bucket, so each touched bucket
+  * becomes one file (more only past
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes`); an
   * unclustered write would leave one small file per (task, bucket)
   * pair for every later upsert to re-read.
   *
@@ -45,6 +50,16 @@ import org.apache.spark.sql.functions._
   * manifest, and drops a leftover delta. The delta and staging copies
   * are files, not `persist`/`localCheckpoint` blocks, so executor loss
   * mid-write cannot destroy untouched rows.
+  *
+  * Listing design: every read of the table (`read`, the survivor
+  * scan) lists it on the driver, one `listStatus` per directory, and
+  * hands the listing to Spark's `InMemoryFileIndex`. Spark's own
+  * listing would start a Spark job with one task per bucket directory
+  * on every read once a table has more directories than
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32); for
+  * a small delivery those jobs cost more than the rows. The relation
+  * is the one `spark.read.parquet` builds: same files, schema,
+  * `_bucket` partition pruning and root path.
   *
   * Layout contract: the bucket count is fixed at first publish and
   * recorded in a hidden `_NUM_BUCKETS` marker in the table root
@@ -113,23 +128,25 @@ object KeyedUpsert {
     }
     checkNumBuckets(fs, root, numBuckets)
 
-    // The one evaluation of `updates`. Unpartitioned: a handful of
-    // files, not one per bucket.
+    // The one evaluation of `updates`, observing its bucket set.
+    // Unpartitioned: a handful of files, not one per bucket.
     val deltaDir = sibling(root, DeltaDir)
-    bucketed(updates, keyCol, numBuckets)
+    val keyed = bucketed(updates, keyCol, numBuckets)
+    val observed = new Observation()
+    keyed.observe(observed, collect_set(col(BucketCol)).as("touched"))
       .write.mode(SaveMode.Overwrite).parquet(deltaDir.toString)
-    val delta = spark.read.parquet(deltaDir.toString)
-    val touched = delta.select(BucketCol).distinct()
-      .collect().map(_.getInt(0)).sorted
+    val touched = observed.get("touched")
+      .asInstanceOf[scala.collection.Seq[Int]].toSeq.sorted
     if (touched.nonEmpty) {
+      val delta = spark.read.schema(keyed.schema).parquet(deltaDir.toString)
       // Survivors: rows in touched buckets whose key is NOT updated.
       // Reads the live table; the live table is not modified until the
       // staging write below has fully committed.
-      val survivors = spark.read.parquet(path)
+      val survivors = scan(spark, path)
         .filter(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
         .join(delta.select(col(keyCol)), Seq(keyCol), "left_anti")
       writeClustered(survivors.unionByName(delta), stage)
-      swap(fs, root, stage)
+      swap(fs, root, stage, touched.toSet)
     }
     fs.delete(deltaDir, true)
   }
@@ -148,12 +165,21 @@ object KeyedUpsert {
   }
 
   /** Swap staged buckets into the live table. Manifest first, so an
-    * interruption anywhere below is rolled back by recover(). */
-  private def swap(fs: FileSystem, root: Path, stage: Path): Unit = {
-    val backup = sibling(root, BackupDir)
-    fs.mkdirs(backup)
+    * interruption anywhere below is rolled back by recover(). A staged
+    * bucket outside `touched` (the buckets the delta holds) would
+    * replace a bucket whose survivors were never read: refused before
+    * the manifest, so the live table is never touched. */
+  private def swap(fs: FileSystem, root: Path, stage: Path,
+                   touched: Set[Int]): Unit = {
     val stagedBuckets = fs.listStatus(stage).map(_.getPath)
       .filter(_.getName.startsWith(BucketCol + "="))
+    val stray = stagedBuckets.map(_.getName)
+      .filterNot(n => touched(n.stripPrefix(BucketCol + "=").toInt))
+    if (stray.nonEmpty) throw new IllegalStateException(
+      s"staged ${stray.mkString(", ")} under $stage, outside the delta's " +
+        s"buckets ${touched.toSeq.sorted.mkString(",")}; not swapped")
+    val backup = sibling(root, BackupDir)
+    fs.mkdirs(backup)
     writeText(fs, new Path(backup, Manifest),
       stagedBuckets.map(_.getName).mkString("\n"))
     stagedBuckets.foreach { staged =>
@@ -225,9 +251,54 @@ object KeyedUpsert {
   }
 
   /** Read back the keyed table (dropping the bucketing column),
-    * rolling back any interrupted swap first. */
+    * rolling back any interrupted swap first. The same rows, schema and
+    * input files as `spark.read.parquet(path).drop("_bucket")`, without
+    * Spark's listing job. */
   def read(spark: SparkSession, path: String): DataFrame = {
     recover(fsOf(spark, path), new Path(path))
-    spark.read.parquet(path).drop(BucketCol)
+    scan(spark, path).drop(BucketCol)
+  }
+
+  /** The table at `path` as `spark.read.parquet(path)` resolves it — a
+    * `LogicalRelation` over an `InMemoryFileIndex` rooted at the
+    * qualified path, `_bucket` inferred as its partition column, the
+    * schema from one footer — but listed here on the driver (see the
+    * listing design above). A table without a data file (missing,
+    * empty) goes to `spark.read.parquet` for Spark's own error. */
+  private def scan(spark: SparkSession, path: String): DataFrame = {
+    val fs = fsOf(spark, path)
+    val root = fs.makeQualified(new Path(path))
+    val leaves =
+      if (fs.exists(root)) listLeaves(fs, root) else Array.empty[FileStatus]
+    if (leaves.forall(_.getPath.getName.startsWith("_")))
+      return spark.read.parquet(path)
+    val options = Map("path" -> path)
+    val index = new InMemoryFileIndex(spark, Seq(root), options, None,
+      new Listed(root, leaves))
+    val format = new ParquetFileFormat()
+    val dataSchema = format.inferSchema(spark, Map.empty, index.allFiles())
+      .getOrElse(throw new IllegalStateException(s"no parquet schema under $root"))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      GraftSqlBridge.asNullable(dataSchema), None, format, options)(spark))
+  }
+
+  /** Every file under `dir` that Spark's listing keeps, one
+    * `listStatus` per directory. */
+  private def listLeaves(fs: FileSystem, dir: Path): Array[FileStatus] =
+    fs.listStatus(dir)
+      .filterNot(s => GraftSqlBridge.hiddenFileName(s.getPath.getName))
+      .flatMap(s => if (s.isDirectory) listLeaves(fs, s.getPath) else Array(s))
+
+  /** Answers the index's lookup of `root` with the driver listing.
+    * `refresh()` calls `invalidateAll` first, which drops it: a
+    * refreshed index (`spark.catalog.refreshByPath`) lists again
+    * instead of keeping files a later upsert has replaced. */
+  private final class Listed(root: Path, leaves: Array[FileStatus])
+      extends FileStatusCache {
+    @volatile private var held: Option[Array[FileStatus]] = Some(leaves)
+    override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
+      if (p == root) held else None
+    override def putLeafFiles(p: Path, files: Array[FileStatus]): Unit = ()
+    override def invalidateAll(): Unit = held = None
   }
 }

@@ -79,6 +79,18 @@ object GraftSqlBridge {
       case _ => None
     }
 
+  /** Spark's hidden-name rule for file listings (`private[spark]`):
+    * `_x` without `=`, `.x` and `x._COPYING_` are skipped,
+    * `_metadata`/`_common_metadata` kept — so a listing made outside
+    * `InMemoryFileIndex` keeps exactly the files `spark.read` would. */
+  def hiddenFileName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** `StructType.asNullable` (`private[spark]`): every file relation's
+    * data schema goes through it in `DataSource.resolveRelation`. */
+  def asNullable(schema: types.StructType): types.StructType =
+    schema.asNullable
+
   /** Raise a proper `AnalysisException` (the constructors are
     * `private[sql]`) for invalid arguments to graft's injected SQL
     * functions — function-builder validation errors should surface at

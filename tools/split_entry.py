@@ -6,7 +6,7 @@ Scala 2.13 allows them before a newline+paren), so map CONTENT is
 byte-identical; only file layout changes."""
 import re, sys, os
 
-ROOT = "/root/repo/src/main/scala/graft"
+ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "src/main/scala/graft")
 path = f"{ROOT}/SparkEntry.scala"
 lines = open(path).read().split("\n")
 

@@ -45,9 +45,15 @@ for d in _graft_delta _graft_stage _graft_backup; do
     echo "[submit-smoke] FAIL: ${SINK}${d} left behind"; exit 1
   fi
 done
+# one clustered parquet file per bucket (a bucket over the advisory
+# partition size would be split; the sf0.001 sink is far below it)
 for b in "$SINK"/_bucket=*; do
-  if ! ls "$b"/*.parquet >/dev/null 2>&1; then
+  n="$(find "$b" -maxdepth 1 -name '*.parquet' | wc -l)"
+  if [ "$n" -eq 0 ]; then
     echo "[submit-smoke] FAIL: bucket $b has no parquet file"; exit 1
+  fi
+  if [ "$n" -gt 1 ]; then
+    echo "[submit-smoke] FAIL: bucket $b holds $n parquet files, not one"; exit 1
   fi
 done
 echo "[submit-smoke] OK: $N persons in $SINK"
