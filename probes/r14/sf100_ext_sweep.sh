@@ -16,9 +16,7 @@ ONLY=$ONLY,q_incremental_dedup,q_dedup_clusters,q_dedup_exact,q_fingerprint,q_sp
 ONLY=$ONLY,q_text_stats,q_lang_id,q_bm25_search,q_dup_spans
 ONLY=$ONLY,q_filter_project,q_topk,q_join_semi
 ONLY=$ONLY,q_sim_ann_kmeans
+JAVA_TOOL_OPTIONS="-Dspark.sql.shuffle.partitions=128 ${JAVA_TOOL_OPTIONS:-}" \
 SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-48g} \
-SPARK_GRAFT_SHUFFLE=${SPARK_GRAFT_SHUFFLE:-128} \
-SPARK_GRAFT_SWEEP_PASSES=2 \
-SPARK_GRAFT_PREBUILD_DEDUP=1 \
 SPARK_GRAFT_ONLY=$ONLY \
 tools/run.sh graft.ScaleSweep /tmp/graft_sf100 "${1:-BENCH_sf100_r14.json}"

@@ -19,9 +19,7 @@ ONLY=$ONLY,q_cluster_coeff,q_degree_hist,q_random_walks,q_walk_pairs,q_link_pred
 ONLY=$ONLY,q_events_sessionize,q_session_window,q_events_window,q_cdc_latest,q_cdc_chunks,q_scd2,q_snapshot_diff,q_ooo_lateness,q_decayed_count,q_sessionized_conversion,q_funnel
 ONLY=$ONLY,q_mmr_rerank,q_price_index,q_rank_movers,q_semantic_dedup,q_sim_cosine_topk,q_sim_quant_topk,q_sim_ann_ivf,q_sim_lsh_buckets,q_sparse_cosine_pairs,q_tfidf_topk,q_inverted_index,q_bm25_wand,q_ngram_novelty,q_pmi_collocations,q_bpe_merge
 ONLY=$ONLY,q_salted_agg,q_heavy_hitters,q_shard_shuffle,q_skew_report
-JAVA_TOOL_OPTIONS="${JAVA_TOOL_OPTIONS:--XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=64}" \
+JAVA_TOOL_OPTIONS="-Dspark.sql.shuffle.partitions=128 ${JAVA_TOOL_OPTIONS:--XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=64}" \
 SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-48g} \
-SPARK_GRAFT_SHUFFLE=${SPARK_GRAFT_SHUFFLE:-128} \
-SPARK_GRAFT_SWEEP_PASSES=${SPARK_GRAFT_SWEEP_PASSES:-2} \
 SPARK_GRAFT_ONLY=$ONLY \
 tools/run.sh graft.ScaleSweep /tmp/graft_sf100 "${1:-BENCH_sf100_r15.json}"

@@ -16,9 +16,7 @@ ONLY=$ONLY,q_dwell_time,q_edit_distance,q_emb_centroid,q_emb_outliers,q_embed_no
 ONLY=$ONLY,q_join_semi_parent,q_join_size,q_json_extract,q_k_anon,q_kmeans,q_l_diversity,q_label_windows,q_lateral,q_lsh_recall,q_ltv_curve,q_minmax_by,q_mixture_alloc,q_mixture_sample,q_mode,q_month_spine,q_multi_distinct,q_multitouch,q_neg_sample,q_nested_collect,q_pack_sequences,q_peak_detect,q_period_change
 ONLY=$ONLY,q_phrase_search,q_pii_redact,q_pivot,q_profile,q_pseudonymize,q_psi_buckets,q_quality_checks,q_range_boundaries,q_ranked_search,q_rater_kappa,q_recursive_cte,q_ref_integrity,q_regression,q_repetition,q_rollup,q_rrf_fusion,q_runs_test,q_scalar_subquery,q_seasonal_forecast,q_seasonality,q_set_ops,q_share_of_parent
 ONLY=$ONLY,q_sketch_intersect,q_skyline,q_star_join,q_stratified_sample,q_stratum_terms,q_streaks,q_string_funcs,q_survival,q_table_checksum,q_throttle,q_time_weighted,q_token_bigrams,q_topk_agg,q_transitions,q_trigram_transitions,q_trimmed_mean,q_unpivot,q_variant,q_vocab_overlap,q_zipf
-JAVA_TOOL_OPTIONS="${JAVA_TOOL_OPTIONS:--XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=64}" \
+JAVA_TOOL_OPTIONS="-Dspark.sql.shuffle.partitions=128 ${JAVA_TOOL_OPTIONS:--XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=64}" \
 SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-48g} \
-SPARK_GRAFT_SHUFFLE=${SPARK_GRAFT_SHUFFLE:-128} \
-SPARK_GRAFT_SWEEP_PASSES=${SPARK_GRAFT_SWEEP_PASSES:-2} \
 SPARK_GRAFT_ONLY=$ONLY \
 tools/run.sh graft.ScaleSweep /tmp/graft_sf100 "${1:-BENCH_sf100_r15b.json}"

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection tool: dumps the formatted physical plan of every
   * SparkEntry query to <outDir>/<name>.plan.txt and prints a one-line
   * summary (exchanges, joins, pushed filters) per query — the
@@ -15,16 +13,12 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 1) args(1) else "target/plans"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // local[4] whatever SPARK_GRAFT_CPUS says: plans stay comparable
+    // across boxes
+    val spark = Suite.session("4")
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    Suite.select().queries.foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
         val plan = df.queryExecution.explainString(

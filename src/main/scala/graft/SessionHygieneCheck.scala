@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Executable check for the no-stopped-context-retention contract
   * (round-13 judge ask #5): the QueryHelpers session caches must drop
   * every entry keyed on a STOPPED context at the next cache access —
@@ -19,15 +17,7 @@ import org.apache.spark.sql.SparkSession
 object SessionHygieneCheck {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    def session(): SparkSession = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-
-    val s1 = session()
-    s1.sparkContext.setLogLevel("WARN")
+    val s1 = Suite.session("4")
     // populate several cache families for s1 (index path caches and
     // checkpoint-holding frame caches both)
     QueryHelpers.dedupComponentsFor(s1, dir).count()
@@ -37,8 +27,7 @@ object SessionHygieneCheck {
       s"expected >=3 cache entries for the live session, got $before")
     s1.stop()
 
-    val s2 = session()
-    s2.sparkContext.setLogLevel("WARN")
+    val s2 = Suite.session("4")
     // any cache access purges stopped-context entries
     QueryHelpers.coEdgesFor(s2, dir).count()
     val after = QueryHelpers.cacheEntriesFor(s1)

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.SeqMap
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -38,7 +40,6 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/tmp/graft_sf1"
     val outJson = args.drop(1).headOption
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val chunks = sys.env.getOrElse("SPARK_GRAFT_STREAM_CHUNKS", "12").toInt
     // SPARK_GRAFT_STATE_PROVIDER=rocksdb swaps the state store to the
     // off-heap RocksDB provider (the documented 100-TB deployment
@@ -48,22 +49,17 @@ object StreamBench {
     val provider = sys.env.getOrElse("SPARK_GRAFT_STATE_PROVIDER", "default")
     require(provider == "default" || provider == "rocksdb",
       s"SPARK_GRAFT_STATE_PROVIDER must be default|rocksdb, got '$provider'")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ui.retainedExecutions", "10")
+    val rocksdb =
+      if (provider == "default") Nil
+      else Seq("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val spark = Suite.session(Suite.cpus(), Seq(
+      "spark.sql.ui.retainedExecutions" -> "10",
       // recentProgress is a ring buffer (default 100): with more
       // chunks than that the EARLIEST batches silently fall out and
       // input_rows/rows_per_sec understate the run (round-13, ADVICE)
-      .config("spark.sql.streaming.numRecentProgressUpdates",
-        (chunks + 16).toString)
-      .config("spark.ui.enabled", "false")
-    if (provider == "rocksdb")
-      builder.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.streaming.numRecentProgressUpdates" -> (chunks + 16).toString) ++
+      rocksdb: _*)
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("streambench")
@@ -170,24 +166,21 @@ object StreamBench {
       encDir, encSchema),
       "state = |households| rows, admit days pruned to the scan horizon")
 
-    def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val js = results.map { case (name, (r, bound)) =>
-      val inRows = r.batches.map(_.rows).sum
-      val sumMs = r.batches.map(_.ms).sum.max(1L)
-      s""""$name":{"batches":${r.batches.size},"input_rows":$inRows,""" +
-        s""""wall_sec":${f(r.wallSec)},""" +
-        s""""rows_per_sec":${f(inRows * 1000.0 / sumMs)},""" +
-        s""""batch_ms":[${r.batches.map(_.ms).mkString(",")}],""" +
-        s""""state_rows":[${r.batches.map(_.stateRows).mkString(",")}],""" +
-        s""""state_updated":[${r.batches.map(_.stateUpdated).mkString(",")}],""" +
-        s""""state_bound":"$bound"}"""
-    }.mkString(",")
-    val out = s"""{"metric":"stream_bench","sf":"$sfDir","chunks":$chunks,""" +
-      s""""state_provider":"$provider","streams":{$js}}"""
+    val out = Json.render(SeqMap("metric" -> "stream_bench", "sf" -> sfDir,
+      "chunks" -> chunks, "state_provider" -> provider,
+      "streams" -> results.map { case (name, (r, bound)) =>
+        val inRows = r.batches.map(_.rows).sum
+        name -> SeqMap("batches" -> r.batches.size, "input_rows" -> inRows,
+          "wall_sec" -> r.wallSec,
+          "rows_per_sec" -> inRows * 1000.0 / r.batches.map(_.ms).sum.max(1L),
+          "batch_ms" -> r.batches.map(_.ms),
+          "state_rows" -> r.batches.map(_.stateRows),
+          "state_updated" -> r.batches.map(_.stateUpdated),
+          "state_bound" -> bound)
+      }))
     println(out)
     outJson.foreach { p =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        out.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(p), out)
       println(s"[streambench] wrote $p")
     }
     spark.stop()

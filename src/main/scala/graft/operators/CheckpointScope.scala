@@ -15,9 +15,10 @@ import org.apache.spark.sql.{Dataset, GraftSqlBridge}
   * unlucky aggregation finds no execution memory left — observed as a
   * whole-JVM SparkOutOfMemoryError 42 minutes into a 26-query sf100
   * run (BENCH_sf100_r12.json, n_clean = 0). `System.gc()` between
-  * queries (ScaleSweep's SPARK_GRAFT_GC_PER_QUERY) is the blunt
-  * workaround; this scope is the deterministic contract: the HARNESS
-  * declares query boundaries, and every checkpoint a query created —
+  * queries (ScaleSweep's former per-query GC switch, which this scope
+  * replaced) is the blunt workaround; this scope is the deterministic
+  * contract: the HARNESS declares query boundaries, and every
+  * checkpoint a query created —
   * minus the ones the session-level caches explicitly retain — is
   * released the moment the query's results are consumed.
   *
@@ -34,7 +35,7 @@ import org.apache.spark.sql.{Dataset, GraftSqlBridge}
   *     its FINAL round, never rounds 1..n−1).
   *
   * Thread-local by design: plan construction and the consuming action
-  * run on the harness thread (ScaleSweep / Bench / Verify); Spark's
+  * run on the harness thread (`graft.Suite.guarded`); Spark's
   * internal task threads never construct graft checkpoints. A scope
   * on thread A never sees thread B's checkpoints — concurrent query
   * runners each get their own scope.

@@ -58,23 +58,15 @@ object RetentionJob {
 
   def main(args: Array[String]): Unit = {
     val job = configFrom(args)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Under spark-submit, spark.master arrives as a system property and
-    // the submit invocation owns master + parallelism (builder.master
-    // here would silently override --master — wrong on a cluster).
-    // Standalone `runMain` keeps the local defaults.
-    val base = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
+    // the submit invocation owns master + parallelism (`Suite.session`
+    // yields to it); standalone `runMain` keeps the local defaults.
+    val spark = graft.Suite.session(graft.Suite.cpus(),
       // reference session conf parity (:118-119) — matters only on the
       // rare RDD edges (localCheckpoint payloads); DataFrame data rides
       // Tungsten's UnsafeRow regardless
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.rdd.compress", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (sys.props.contains("spark.master")) base
-                 else base.master(s"local[$cpus]")
-                   .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
+      "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer",
+      "spark.rdd.compress" -> "true")
     try run(spark, job) finally spark.stop()
   }
 }

@@ -106,7 +106,9 @@ object KeyedUpsert {
   /** Upsert `updates` (one row per key) into the keyed table at `path`.
     * Whole-row replace per key, matching the reference's per-person
     * array replacement semantics. `updates` is evaluated once; an
-    * empty `updates` leaves an existing table unchanged. Throws
+    * empty `updates` leaves an existing table unchanged. A change
+    * refreshes Spark's cache by path (else a cached earlier read answers
+    * later reads with the old rows; nothing cached, no job). Throws
     * IllegalArgumentException if the table was published with a
     * different `numBuckets`.
     */
@@ -124,6 +126,7 @@ object KeyedUpsert {
       writeText(fs, new Path(stage, NumBuckets), numBuckets.toString)
       if (!fs.rename(stage, root))
         throw new java.io.IOException(s"failed to publish $stage -> $root")
+      spark.catalog.refreshByPath(path)
       return
     }
     checkNumBuckets(fs, root, numBuckets)
@@ -147,6 +150,7 @@ object KeyedUpsert {
         .join(delta.select(col(keyCol)), Seq(keyCol), "left_anti")
       writeClustered(survivors.unionByName(delta), stage)
       swap(fs, root, stage, touched.toSet)
+      spark.catalog.refreshByPath(path)
     }
     fs.delete(deltaDir, true)
   }

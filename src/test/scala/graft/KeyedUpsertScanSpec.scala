@@ -169,4 +169,19 @@ class KeyedUpsertScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(KeyedUpsert.read(spark, path).count() == 2210)
     } finally cached.unpersist()
   }
+
+  test("an upsert refreshes Spark's cache of the table: fresh reads see its rows") {
+    val path = decoyedTable("scan_cache")
+    val cached = spark.read.parquet(path).cache()
+    try {
+      assert(cached.count() == 2010)
+      KeyedUpsert.upsert(spark, path,
+        (5000L until 5100L).map(k => (k, "late", 1.0)).toDF("k", "v", "w"),
+        "k", Buckets)
+      // no refreshByPath here: the upsert did it
+      assert(KeyedUpsert.read(spark, path).count() == 2110)
+      assert(spark.read.parquet(path).count() == 2110)
+      assert(KeyedUpsert.read(spark, path).filter($"v" === "late").count() == 100)
+    } finally cached.unpersist()
+  }
 }
