@@ -9,8 +9,9 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.retention.{HhEncounter, HhRange, Incremental, Retention, StarAdapter}
 
 /** Contract benchmark: `Suite.timed` over SPARK_GRAFT_SF_DIR with a
-  * warm-up pass; writes and prints bench_full.json, then the compact
-  * line. The replays are keys of their own, not in the total: they
+  * warm-up pass; writes `target/bench_full.json` (its in-progress copy
+  * `target/bench_full.json.partial`) under the working directory,
+  * prints it, then the compact line. The replays are keys of their own, not in the total: they
   * time state maintenance against the batch recompute it replaces. */
 object Bench {
 
@@ -20,8 +21,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // under the build's output dir: the repository root's copy is a
+    // committed record, not this run's output
+    val out = java.nio.file.Paths.get("target", "bench_full.json")
+    java.nio.file.Files.createDirectories(out.getParent)
     val spark = Suite.session(Suite.cpus())
-    val clean = try run(spark, sfDir, Suite.select(), "bench_full.json")
+    val clean = try run(spark, sfDir, Suite.select(), out.toString)
       finally spark.stop()
     if (!clean) sys.exit(1)
   }
