@@ -705,7 +705,6 @@ object Similarity {
   def hyperplaneLshBuckets(emb: DataFrame, planes: Int, bands: Int): DataFrame = {
     val dims = 64
     val spark = emb.sparkSession
-    import spark.implicits._
     // Round-15 shape change: the previous posexplode→join(planeDf)→
     // groupBy(vec_id,p)→groupBy(vec_id,band) pipeline pushed
     // |V|·planes·dims rows through a partial aggregate and TWO hash

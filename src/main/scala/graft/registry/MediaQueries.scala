@@ -1,10 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
-import graft.retention.{EventsAdapter, Retention, StarAdapter}
 import QueryHelpers._
 
 /** Media query registry — one domain slice of the SparkEntry suite

@@ -1,10 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.retention.{EventsAdapter, Retention, StarAdapter}
 import QueryHelpers._
 
 /** Retrieval query registry — one domain slice of the SparkEntry suite

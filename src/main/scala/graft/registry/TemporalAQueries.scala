@@ -6,8 +6,6 @@ import org.apache.spark.sql.functions._
 
 import graft.plans.{AsOfDirection, AsOfJoinNative}
 import graft.plans.AsOfDirection.{Backward, Forward, Nearest}
-import graft.retention.{EventsAdapter, Retention, StarAdapter}
-import QueryHelpers._
 
 /** Temporal query registry — one domain slice of the SparkEntry suite
   * (split in round 7 so a single-file edit cannot take out the whole

@@ -4,9 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.retention.{EventsAdapter, Retention, StarAdapter}
-import QueryHelpers._
-
 /** Temporal query registry — one domain slice of the SparkEntry suite
   * (split in round 7 so a single-file edit cannot take out the whole
   * 238-query suite). Entries are (name → builder) plus the DuckDB

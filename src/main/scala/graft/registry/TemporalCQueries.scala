@@ -4,9 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.retention.{EventsAdapter, Retention, StarAdapter}
-import QueryHelpers._
-
 /** Temporal query registry, slice C — split from TemporalAQueries in
   * round 9 at the 1,400-line guideline (the round-7 registry split
   * rationale: a single-file edit must not take out a whole domain).

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.retention.{EventsAdapter, Retention, StarAdapter}
 import QueryHelpers._
 
 /** Text query registry — one domain slice of the SparkEntry suite

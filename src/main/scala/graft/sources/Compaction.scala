@@ -11,51 +11,29 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   *
   * Strategy: measure actual on-disk bytes, rewrite to
   * ceil(bytes / targetBytes) files via a round-robin repartition
-  * (size-balanced regardless of key skew), and publish through the
-  * same staging-rename protocol as [[KeyedUpsert]] so readers never
-  * observe a half-compacted directory and a crash loses nothing.
+  * (size-balanced regardless of key skew), and publish the rewritten
+  * directory whole ([[Commit.publish]]): a reader sees the whole previous
+  * file set or the whole compacted one, and the next `compact` rolls an
+  * interrupted one back first. Single writer, and no reader during a
+  * compaction.
   */
 object Compaction {
-
-  /** Finish or unwind an interrupted previous compaction. The swap is
-    * two renames (root→old, stage→root); a crash between them leaves
-    * root missing with the data intact in `old` — restore it. A crash
-    * after the second rename leaves a stale `old`/stage — drop them. */
-  private def recover(fs: org.apache.hadoop.fs.FileSystem, root: Path): Unit = {
-    val old = new Path(root.getParent, root.getName + "_graft_precompact")
-    val stage = new Path(root.getParent, root.getName + "_graft_compact")
-    if (!fs.exists(root) && fs.exists(old)) {
-      if (!fs.rename(old, root))
-        throw new java.io.IOException(s"failed to restore $old -> $root")
-    } else if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(stage)) fs.delete(stage, true)
-  }
 
   /** Compact the parquet directory at `path` toward `targetBytes` per
     * output file. Returns (filesBefore, filesAfter). */
   def compact(spark: SparkSession, path: String,
               targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recover(fs, root)
+    val fs = Commit.fsOf(spark, path)
+    Commit.recover(fs, root)
     val parts = fs.listStatus(root)
       .filter(f => f.getPath.getName.endsWith(".parquet"))
     val totalBytes = parts.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     if (parts.length <= nOut) return (parts.length, parts.length)
-    val stage = new Path(root.getParent, root.getName + "_graft_compact")
-    spark.read.parquet(path)
+    Commit.rebuild(spark, path)(spark.read.parquet(path)
       .repartition(nOut) // round-robin: size-balanced, skew-immune
-      .write.mode(SaveMode.Overwrite).parquet(stage.toString)
-    // swap: the moment of truth is a single directory rename pair
-    val old = new Path(root.getParent, root.getName + "_graft_precompact")
-    if (!fs.rename(root, old))
-      throw new java.io.IOException(s"failed to retire $root")
-    if (!fs.rename(stage, root)) {
-      fs.rename(old, root) // roll back
-      throw new java.io.IOException(s"failed to publish $stage")
-    }
-    fs.delete(old, true)
+      .write.mode(SaveMode.Overwrite).parquet(_))
     val after = fs.listStatus(root)
       .count(f => f.getPath.getName.endsWith(".parquet"))
     (parts.length, after)

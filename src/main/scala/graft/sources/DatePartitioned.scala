@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Date-partitioned parquet layout with DYNAMIC partition overwrite —
   * the daily-ingest contract: re-running one day's load rewrites ONLY

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted MinHash-LSH dedup index — the stored-artifact form of the
@@ -41,41 +41,47 @@ import org.apache.spark.sql.functions._
   * full rebuild over (stored ∖ shadowed) ∪ delta — DedupIndexSpec pins
   * the equivalence. The next [[build]] folds deltas in and resets the
   * epoch.
+  *
+  * Publish contract ([[Commit.publish]]): a reader sees the whole
+  * previous build or the whole new one, never one build's pairs beside
+  * another's manifest. Single writer, and no reader during a build.
   */
 object DedupIndex {
 
-  /** Build the index at `path` from the corpus — the nightly job. */
+  /** Build the index at `path` from the corpus — the nightly job.
+    * `docs` is evaluated once: the epoch is observed on the signature
+    * write, so it describes the evaluation the signatures came from. */
   def build(docs: DataFrame, idCol: String, textCol: String, path: String,
             n: Int = 3, k: Int = 16, bands: Int = 4): Unit = {
     val spark = docs.sparkSession
-    graft.functions.Dedup
-      .docBandSignatures(docs, idCol, textCol, n, k, bands)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/signatures")
-    val written = spark.read.parquet(s"$path/signatures")
-    pairsOf(explodeBands(written), explodeBands(written))
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/pairs")
-    docs.agg(count(lit(1)).as("n_docs"),
-        // order-independent, ANSI-safe (xor never overflows) corpus
-        // fingerprint over id AND text — a re-delivered doc with
-        // changed content changes the epoch
-        bit_xor(xxhash64(col(idCol), col(textCol))).as("corpus_sig"))
-      .withColumn("n", lit(n)).withColumn("k", lit(k))
-      .withColumn("bands", lit(bands))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/manifest")
+    Commit.rebuild(spark, path) { stage =>
+      val epoch = new Observation()
+      val (nDocs, sig) = epochOf(idCol, textCol)
+      graft.functions.Dedup.docBandSignatures(docs.observe(epoch, nDocs, sig),
+          idCol, textCol, n, k, bands)
+        .write.mode(SaveMode.Overwrite).parquet(s"$stage/signatures")
+      val written = spark.read.parquet(s"$stage/signatures")
+      pairsOf(explodeBands(written), explodeBands(written))
+        .write.mode(SaveMode.Overwrite).parquet(s"$stage/pairs")
+      val m = epoch.get
+      spark.range(0, 1, 1, 1).select(lit(m("n_docs")).as("n_docs"),
+          lit(m("corpus_sig")).cast("long").as("corpus_sig"),
+          lit(n).as("n"), lit(k).as("k"), lit(bands).as("bands"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$stage/manifest")
+    }
   }
 
   /** The stored candidate-pair relation (doc_a < doc_b, distinct). */
   def pairs(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/pairs")
+    Commit.read(spark, path, "pairs")
 
   /** The stored per-doc band signatures. */
   def signatures(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/signatures")
+    Commit.read(spark, path, "signatures")
 
   /** The build manifest: (n_docs, corpus_sig, n, k, bands) — 1 row. */
   def manifest(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/manifest")
+    Commit.read(spark, path, "manifest")
 
   /** Epoch check: does the index at `path` describe exactly `docs`?
     * One aggregate over (id, text) vs the stored fingerprint — cheap
@@ -85,8 +91,8 @@ object DedupIndex {
               path: String): Boolean = {
     val m = manifest(docs.sparkSession, path)
       .select("n_docs", "corpus_sig").head()
-    val c = docs.agg(count(lit(1)),
-      bit_xor(xxhash64(col(idCol), col(textCol)))).head()
+    val (nDocs, sig) = epochOf(idCol, textCol)
+    val c = docs.agg(nDocs, sig).head()
     m.getLong(0) == c.getLong(0) && m.getLong(1) == c.getLong(1)
   }
 
@@ -132,6 +138,13 @@ object DedupIndex {
       .select("doc_a", "doc_b")
     keptStored.unionByName(newPairs).distinct()
   }
+
+  /** The epoch: row count and an order-independent, ANSI-safe (xor
+    * never overflows) fingerprint over id AND text — a re-delivered doc
+    * with changed content changes it. */
+  private def epochOf(idCol: String, textCol: String): (Column, Column) =
+    (count(lit(1)).as("n_docs"),
+     bit_xor(xxhash64(col(idCol), col(textCol))).as("corpus_sig"))
 
   private def explodeBands(sigs: DataFrame): DataFrame =
     sigs.select(col("doc_id"), posexplode(col("sigs")).as(Seq("band", "sig")))

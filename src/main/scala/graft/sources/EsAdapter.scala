@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Elasticsearch adapter — the reference's literal I/O boundary,

@@ -46,6 +46,10 @@ import org.apache.spark.sql.functions._
   * .bm25Search]] — same integer score arithmetic, same (score DESC,
   * id ASC) top-k — and gated by the same exhaustive DuckDB oracle
   * (`q_bm25_bucketed`).
+  *
+  * Publish contract ([[Commit.publish]]): a search sees the whole
+  * previous build or the whole new one, never one build's ceilings
+  * pruning another's postings. Single writer; no search during a build.
   */
 object ImpactIndex {
 
@@ -61,56 +65,58 @@ object ImpactIndex {
   def build(docs: DataFrame, idCol: String, textCol: String, path: String,
             termBuckets: Int = 64, docBuckets: Int = 16): Unit = {
     require(termBuckets > 0 && docBuckets > 0)
-    val posts = graft.functions.InvertedIndex.postings(docs, idCol, textCol)
-    val dl = posts.groupBy(col(idCol)).agg(sum("tf").as("dl"))
-    val stats = dl.agg(sum("dl").as("tot"), count(lit(1)).as("nd"))
-    val dfs = posts.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    // the exact per-posting BM25 term score — the same integer-exact
-    // derivation as InvertedIndex.bm25Search, evaluated at INDEX time
-    val scored = posts
-      .join(dl, idCol)
-      .join(dfs, "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("s_milli", expr("tot * 1000 div nd"))
-      .withColumn("score", expr(graft.functions.InvertedIndex
-        .termScoreSql("tf", "dl * 1000")))
-      .withColumn("term_bucket",
-        pmod(xxhash64(col("term")), lit(termBuckets.toLong)))
-      .withColumn("doc_bucket",
-        pmod(xxhash64(col(idCol)), lit(docBuckets.toLong)))
-    // one exchange on the partition tuple so each (tb, db) directory is
-    // written by the tasks that own it — without this every task opens
-    // a writer per directory (termBuckets × docBuckets small files each)
-    scored.select(col("term"), col(idCol), col("tf"), col("score"),
-              col("term_bucket"), col("doc_bucket"))
-      .repartition(col("term_bucket"), col("doc_bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("term_bucket", "doc_bucket")
-      .parquet(s"$path/postings")
-    // sidecar + stats derive from the postings AS WRITTEN, not from the
-    // `scored` plan: re-evaluating the plan would re-run tokenization +
-    // the dl/df joins per write (double the nightly build cost), and —
-    // worse — a nondeterministic `docs` input could produce sidecar
-    // ceilings from a DIFFERENT evaluation than the persisted postings,
-    // silently breaking the block-bound invariant the prune relies on.
-    // Reading back the written files makes the metadata consistent with
-    // the data by construction.
-    val written = docs.sparkSession.read.parquet(s"$path/postings")
-    // partition columns come back as INT from directory-value
-    // inference; the sidecar contract (and its readers) is LONG
-    written.groupBy(col("term"),
-        col("term_bucket").cast("long").as("term_bucket"),
-        col("doc_bucket").cast("long").as("doc_bucket"))
-      .agg(max("score").as("max_score"), count(lit(1)).as("n_docs"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/sidecar")
-    // pinned corpus stats (the scoring EPOCH): every posting's score
-    // was computed against these; delta segments score against the
-    // same epoch until the next rebuild folds them in
-    written.agg(sum("tf").as("tot"),
-                countDistinct(col(idCol)).as("nd"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/stats")
+    Commit.rebuild(docs.sparkSession, path) { stage =>
+      val posts = graft.functions.InvertedIndex.postings(docs, idCol, textCol)
+      val dl = posts.groupBy(col(idCol)).agg(sum("tf").as("dl"))
+      val stats = dl.agg(sum("dl").as("tot"), count(lit(1)).as("nd"))
+      val dfs = posts.groupBy(col("term")).agg(count(lit(1)).as("df"))
+      // the exact per-posting BM25 term score — the same integer-exact
+      // derivation as InvertedIndex.bm25Search, evaluated at INDEX time
+      val scored = posts
+        .join(dl, idCol)
+        .join(dfs, "term")
+        .crossJoin(broadcast(stats))
+        .withColumn("s_milli", expr("tot * 1000 div nd"))
+        .withColumn("score", expr(graft.functions.InvertedIndex
+          .termScoreSql("tf", "dl * 1000")))
+        .withColumn("term_bucket",
+          pmod(xxhash64(col("term")), lit(termBuckets.toLong)))
+        .withColumn("doc_bucket",
+          pmod(xxhash64(col(idCol)), lit(docBuckets.toLong)))
+      // one exchange on the partition tuple so each (tb, db) directory is
+      // written by the tasks that own it — without this every task opens
+      // a writer per directory (termBuckets × docBuckets small files each)
+      scored.select(col("term"), col(idCol), col("tf"), col("score"),
+                col("term_bucket"), col("doc_bucket"))
+        .repartition(col("term_bucket"), col("doc_bucket"))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("term_bucket", "doc_bucket")
+        .parquet(s"$stage/postings")
+      // sidecar + stats derive from the postings AS WRITTEN, not from the
+      // `scored` plan: re-evaluating the plan would re-run tokenization +
+      // the dl/df joins per write (double the nightly build cost), and —
+      // worse — a nondeterministic `docs` input could produce sidecar
+      // ceilings from a DIFFERENT evaluation than the persisted postings,
+      // silently breaking the block-bound invariant the prune relies on.
+      // Reading back the written files makes the metadata consistent with
+      // the data by construction.
+      val written = docs.sparkSession.read.parquet(s"$stage/postings")
+      // partition columns come back as INT from directory-value
+      // inference; the sidecar contract (and its readers) is LONG
+      written.groupBy(col("term"),
+          col("term_bucket").cast("long").as("term_bucket"),
+          col("doc_bucket").cast("long").as("doc_bucket"))
+        .agg(max("score").as("max_score"), count(lit(1)).as("n_docs"))
+        .coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(s"$stage/sidecar")
+      // pinned corpus stats (the scoring EPOCH): every posting's score
+      // was computed against these; delta segments score against the
+      // same epoch until the next rebuild folds them in
+      written.agg(sum("tf").as("tot"),
+                  countDistinct(col(idCol)).as("nd"))
+        .coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(s"$stage/stats")
+    }
   }
 
   /** Planner metadata for one search: the query terms' partition set,
@@ -141,7 +147,7 @@ object ImpactIndex {
     require(terms.nonEmpty && terms.distinct.size == terms.size)
     require(k > 0 && seedBlocks > 0)
     // 1. sidecar slice: |terms| × docBuckets rows of planner metadata
-    val side = spark.read.parquet(s"$path/sidecar")
+    val side = Commit.read(spark, path, "sidecar")
       .filter(col("term").isin(terms: _*))
       .select(col("term_bucket"), col("doc_bucket"), col("max_score"))
       .collect()
@@ -149,7 +155,7 @@ object ImpactIndex {
     val bounds: Map[Long, Long] = side.groupBy(_.getLong(1))
       .view.mapValues(_.map(_.getLong(2)).sum).toMap
 
-    val posts = spark.read.parquet(s"$path/postings")
+    val posts = Commit.read(spark, path, "postings")
     def inSet(c: String, xs: Seq[Long]) =
       if (xs.isEmpty) lit(false) else col(c).isin(xs: _*)
     def scoreOf(dbs: Seq[Long]): DataFrame = {
@@ -210,9 +216,9 @@ object ImpactIndex {
                       terms: Seq[String], k: Int,
                       seedBlocks: Int = 2): DataFrame = {
     require(terms.nonEmpty && terms.distinct.size == terms.size)
-    val stats = spark.read.parquet(s"$path/stats") // 1 row: tot, nd
+    val stats = Commit.read(spark, path, "stats") // 1 row: tot, nd
     // pinned per-term df from the sidecar (Σ block counts per term)
-    val mainDf = spark.read.parquet(s"$path/sidecar")
+    val mainDf = Commit.read(spark, path, "sidecar")
       .filter(col("term").isin(terms: _*))
       .groupBy(col("term")).agg(sum("n_docs").as("main_df"))
     val deltaPosts = graft.functions.InvertedIndex

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
@@ -58,25 +56,10 @@ import org.apache.spark.sql.types.StructType
   * read from one footer, so a file of another shape would be misread;
   * it takes the fold, whose union refuses it.
   *
-  * Durability design (no ACID table format available, so the commit
-  * protocol is explicit): nothing live is mutated before a manifest in
-  * `<table>_graft_backup` records what the commit will change, and
-  * deleting that manifest — a single-file delete — is the commit point.
-  * There are two kinds:
-  *  - `_MANIFEST` (fold): the bucket dirs swapped. Merged buckets are
-  *    first written COMPLETELY to a staging directory (the live table is
-  *    only read at that point), then swapped in per bucket via
-  *    metadata-only renames, with the old bucket dirs (and the inbox)
-  *    preserved in the backup directory.
-  *  - `_APPENDED` (append): the file names renamed into the inbox.
-  * A crash at ANY point leaves every pre-upsert row recoverable: the
-  * next `upsert`/`read` call rolls an interrupted commit back to the
-  * pre-upsert state (restores the backed-up dirs, drops new buckets,
-  * deletes the appended files) and drops a leftover delta. A manifest
-  * that is gone at the commit point means something rolled the upsert
-  * back under it: the upsert throws instead of reporting success. The
-  * delta and staging copies are files, not `persist`/`localCheckpoint`
-  * blocks, so executor loss mid-write cannot destroy untouched rows.
+  * Durability and concurrency: [[Commit]]'s protocol (single writer, no
+  * reader while it writes). A fold swaps staged buckets in under a
+  * `_MANIFEST`, an append renames the delta's files into the inbox under
+  * an `_APPENDED`; the next `upsert`/`read` rolls either back.
   *
   * Listing design: every read of the table (`read`, the upsert's scan)
   * lists it on the driver, one `listStatus` per directory, and
@@ -98,14 +81,6 @@ import org.apache.spark.sql.types.StructType
   * refused: its updated keys would hash to new buckets while their old
   * rows survived in the old ones. A table published without the marker
   * adopts the first upserting caller's count.
-  *
-  * Concurrency contract: SINGLE WRITER (matching the reference's one
-  * batch job per index), and no reader while it writes. Two concurrent
-  * upserts to the same path would race on the delta/staging/backup
-  * directories; serialize writers or give each its own table. `read`
-  * first rolls back any interrupted commit, so a read that overlaps a
-  * live upsert rolls that upsert back (which then throws at its commit
-  * point, or fails a rename): run readers between upserts.
   */
 object KeyedUpsert {
 
@@ -122,8 +97,6 @@ object KeyedUpsert {
   val MaxInboxFiles = 8
   private val Inbox = s"$BucketCol=$InboxBucket"
   private val DeltaDir = "_graft_delta"
-  private val StageDir = "_graft_stage"
-  private val BackupDir = "_graft_backup"
   private val Manifest = "_MANIFEST"
   private val Appended = "_APPENDED"
   private val NumBuckets = "_NUM_BUCKETS"
@@ -146,12 +119,6 @@ object KeyedUpsert {
       .write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
       .parquet(dir.toString)
 
-  private def sibling(root: Path, suffix: String): Path =
-    new Path(root.getParent, root.getName + suffix)
-
-  private def fsOf(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** The files under `dir` (not recursive) that Spark's listing keeps. */
   private def dataFiles(fs: FileSystem, dir: Path): Seq[Path] =
     if (!fs.exists(dir)) Nil
@@ -172,17 +139,15 @@ object KeyedUpsert {
              keyCol: String, numBuckets: Int = 64): Unit = {
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
     val root = new Path(path)
-    val fs = fsOf(spark, path)
+    val fs = Commit.fsOf(spark, path)
     recover(fs, root) // roll back any interrupted previous commit first
-    val stage = sibling(root, StageDir)
+    val stage = Commit.stageOf(root)
 
     if (!fs.exists(root)) {
       // First write: stage fully, then publish with one rename.
       writeClustered(bucketed(updates, keyCol, numBuckets), stage)
-      writeText(fs, new Path(stage, NumBuckets), numBuckets.toString)
-      if (!fs.rename(stage, root))
-        throw new java.io.IOException(s"failed to publish $stage -> $root")
-      spark.catalog.refreshByPath(path)
+      Commit.writeText(fs, new Path(stage, NumBuckets), numBuckets.toString)
+      Commit.publish(spark, root, stage)
       return
     }
     checkNumBuckets(fs, root, numBuckets)
@@ -190,7 +155,7 @@ object KeyedUpsert {
     // The one evaluation of `updates`, observing its bucket set.
     // Unpartitioned and without `_bucket`: a handful of files an append
     // can move into the inbox as they are.
-    val deltaDir = sibling(root, DeltaDir)
+    val deltaDir = Commit.sibling(root, DeltaDir)
     val observed = new Observation()
     updates.observe(observed,
         collect_set(bucketOf(keyCol, numBuckets)).as("touched"))
@@ -235,9 +200,9 @@ object KeyedUpsert {
     * a table without the marker adopts `numBuckets`. */
   private def checkNumBuckets(fs: FileSystem, root: Path, numBuckets: Int): Unit = {
     val marker = new Path(root, NumBuckets)
-    if (!fs.exists(marker)) writeText(fs, marker, numBuckets.toString)
+    if (!fs.exists(marker)) Commit.writeText(fs, marker, numBuckets.toString)
     else {
-      val recorded = readText(fs, marker).trim.toInt
+      val recorded = Commit.readText(fs, marker).trim.toInt
       if (recorded != numBuckets) throw new IllegalArgumentException(
         s"$root is laid out in $recorded buckets; upsert asked for " +
         s"$numBuckets, which would leave updated keys' old rows in place")
@@ -252,12 +217,9 @@ object KeyedUpsert {
     files.map(f => new Path(inbox, f.getName)).find(fs.exists).foreach { p =>
       throw new IllegalStateException(s"$p already exists; not appended")
     }
-    underManifest(fs, root, Appended, files.map(_.getName)) {
+    Commit.underManifest(fs, root, Appended, files.map(_.getName), "upsert") {
       fs.mkdirs(inbox)
-      files.foreach { f =>
-        if (!fs.rename(f, new Path(inbox, f.getName)))
-          throw new java.io.IOException(s"failed to move $f into $inbox")
-      }
+      files.foreach(f => Commit.move(fs, f, new Path(inbox, f.getName)))
     }
   }
 
@@ -276,109 +238,40 @@ object KeyedUpsert {
       s"staged buckets ${staged.sorted.mkString(",")} under $stage, not the " +
         s"buckets ${rewrite.toSeq.sorted.mkString(",")} whose rows were read; " +
         "not swapped")
-    val backup = sibling(root, BackupDir)
-    underManifest(fs, root, Manifest,
-        stagedBuckets.map(_.getName).toSeq ++ (if (inbox) Seq(Inbox) else Nil)) {
-      if (inbox && !fs.rename(new Path(root, Inbox), new Path(backup, Inbox)))
-        throw new java.io.IOException(s"failed to move out ${new Path(root, Inbox)}")
+    val backup = Commit.backupOf(root)
+    Commit.underManifest(fs, root, Manifest, stagedBuckets.map(_.getName).toSeq ++
+        (if (inbox) Seq(Inbox) else Nil), "upsert") {
+      if (inbox) Commit.move(fs, new Path(root, Inbox), new Path(backup, Inbox))
       stagedBuckets.foreach { staged =>
         val live = new Path(root, staged.getName)
-        if (fs.exists(live) &&
-            !fs.rename(live, new Path(backup, staged.getName)))
-          throw new java.io.IOException(s"failed to back up $live")
-        if (!fs.rename(staged, live))
-          throw new java.io.IOException(s"failed to swap in $staged")
+        if (fs.exists(live)) Commit.move(fs, live, new Path(backup, staged.getName))
+        Commit.move(fs, staged, live)
       }
     }
     fs.delete(stage, true)
   }
 
-  /** Run `moves` under the manifest `name` in the backup dir, written
-    * first with `entries`, so an interruption anywhere in `moves` is
-    * rolled back by recover(). COMMIT POINT: deleting the manifest — a
-    * single-file delete — makes the moves final. A manifest that is
-    * already gone means a `read` or upsert ran recover() under this
-    * upsert and rolled it back: fail loudly, not report an update that
-    * is lost. The delete MUST go before the recursive backup delete: a
-    * crash midway through deleting the backup dir would otherwise leave
-    * the manifest alongside a PARTIAL backup, and recovery would "roll
-    * back" committed buckets whose backups are already gone —
-    * destroying them. */
-  private def underManifest(fs: FileSystem, root: Path, name: String,
-                            entries: Seq[String])(moves: => Unit): Unit = {
-    val backup = sibling(root, BackupDir)
-    val manifest = new Path(backup, name)
-    fs.mkdirs(backup)
-    writeText(fs, manifest, entries.mkString("\n"))
-    moves
-    if (!fs.delete(manifest, false)) throw new IllegalStateException(
-      s"commit manifest $manifest was gone at the commit point: a read or " +
-        "upsert of the table ran alongside this upsert and rolled it back. " +
-        "Re-run the upsert with no reader or writer of the table alongside.")
-    fs.delete(backup, true)
-  }
-
-  /** Roll back an interrupted commit, then clear staging and the delta.
-    * A manifest's existence is the authority: it is written before the
-    * first rename and deleted (single-file, effectively atomic) only at
-    * commit.
-    *  - `_MANIFEST`: restore every listed dir from backup (or drop it,
-    *    if it was newly created by the interrupted run). When the
-    *    manifest is present the backup is complete for every dir already
-    *    moved out; the inbox is only ever moved out, never staged, so
-    *    without a backup it is still live and untouched.
-    *  - `_APPENDED`: delete every listed file from the inbox, and the
-    *    inbox dir if that empties it.
-    * Idempotent — safe to call any number of times, including after a
-    * crash mid-recovery. */
+  /** Roll back an interrupted upsert, then clear staging and the delta
+    * ([[Commit.recover]]; idempotent).
+    *  - `_MANIFEST`: restore every listed dir from backup, or drop it if
+    *    it was new (not backed up, no longer staged). The inbox is only
+    *    moved out, never staged: without a backup it is still live.
+    *  - `_APPENDED`: delete the listed files from the inbox, and the
+    *    inbox dir if that empties it. */
   private def recover(fs: FileSystem, root: Path): Unit = {
-    val backup = sibling(root, BackupDir)
-    val stage = sibling(root, StageDir)
-    val manifest = new Path(backup, Manifest)
-    if (fs.exists(manifest)) {
-      lines(fs, manifest).foreach { name =>
-        val live = new Path(root, name)
-        val saved = new Path(backup, name)
-        if (fs.exists(saved)) {          // pre-existing dir: restore
-          if (fs.exists(live)) fs.delete(live, true)
-          if (!fs.rename(saved, live))
-            throw new java.io.IOException(s"failed to restore $saved")
-        } else if (name != Inbox && fs.exists(stage) &&
-                   !fs.exists(new Path(stage, name))) {
-          // bucket was new in the interrupted run and already moved
-          // out of staging — it did not exist before; drop it
-          if (fs.exists(live)) fs.delete(live, true)
-        }
-      }
-    }
-    val appended = new Path(backup, Appended)
-    if (fs.exists(appended)) {
+    val stage = Commit.stageOf(root)
+    Commit.pending(fs, root, Manifest).foreach(_.foreach { name =>
+      val live = new Path(root, name)
+      if (!Commit.restore(fs, root, name, live) && name != Inbox &&
+          fs.exists(stage) && !fs.exists(new Path(stage, name)) && fs.exists(live))
+        fs.delete(live, true)
+    })
+    Commit.pending(fs, root, Appended).foreach { names =>
       val inbox = new Path(root, Inbox)
-      lines(fs, appended).foreach(n => fs.delete(new Path(inbox, n), false))
+      names.foreach(n => fs.delete(new Path(inbox, n), false))
       if (fs.exists(inbox) && fs.listStatus(inbox).isEmpty) fs.delete(inbox, true)
     }
-    Seq(backup, stage, sibling(root, DeltaDir))
-      .foreach(p => if (fs.exists(p)) fs.delete(p, true))
-  }
-
-  private def lines(fs: FileSystem, p: Path): Seq[String] =
-    readText(fs, p).split("\n").toSeq.filter(_.nonEmpty)
-
-  private def writeText(fs: FileSystem, p: Path, text: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(text.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private def readText(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      new String(bytes.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
+    Commit.recover(fs, root, Commit.sibling(root, DeltaDir))
   }
 
   /** Read back the keyed table (dropping the bucketing column),
@@ -386,7 +279,7 @@ object KeyedUpsert {
     * input files as `spark.read.parquet(path).drop("_bucket")`, without
     * Spark's listing job. */
   def read(spark: SparkSession, path: String): DataFrame = {
-    recover(fsOf(spark, path), new Path(path))
+    recover(Commit.fsOf(spark, path), new Path(path))
     scan(spark, path).drop(BucketCol)
   }
 
@@ -397,7 +290,7 @@ object KeyedUpsert {
     * listing design above). A table without a data file (missing,
     * empty) goes to `spark.read.parquet` for Spark's own error. */
   private def scan(spark: SparkSession, path: String): DataFrame = {
-    val fs = fsOf(spark, path)
+    val fs = Commit.fsOf(spark, path)
     val root = fs.makeQualified(new Path(path))
     val leaves =
       if (fs.exists(root)) listLeaves(fs, root) else Array.empty[FileStatus]

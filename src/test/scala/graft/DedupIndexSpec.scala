@@ -103,4 +103,70 @@ class DedupIndexSpec extends SparkSpec {
     assert(want.nonEmpty)
     assert(got == want)
   }
+
+  test("build evaluates docs once: the epoch describes the stored signatures") {
+    val n = 200
+    val evals = spark.sparkContext.longAccumulator("dedup_build_evals")
+    val pick = udf { (_: Long) =>
+      evals.add(1)
+      java.util.concurrent.ThreadLocalRandom.current().nextDouble() < 0.5
+    }.asNondeterministic()
+    val d = docs(17L, n).filter(pick(col("doc_id")))
+    val path = tmp("once")
+    DedupIndex.build(d, "doc_id", "text", path)
+    assert(evals.value == n)
+    val m = DedupIndex.manifest(spark, path).select("n_docs").head().getLong(0)
+    assert(m == DedupIndex.signatures(spark, path).count())
+  }
+
+  /** Index A at a `trap:` path, then a rebuild over B (new ids, other
+    * text) crashed at each of its renames: after each crash, a read
+    * sees the whole of A or the whole of B. */
+  test("a rebuild crashed at any rename leaves the whole old or the whole new index") {
+    val a = docs(21L, 80)
+    val b = docs(22L, 80, idOffset = 1000L)
+    val wantA = pairSet(Dedup.lshCandidatePairs(a, "doc_id", "text", 3, 16, 4))
+    val wantB = pairSet(Dedup.lshCandidatePairs(b, "doc_id", "text", 3, 16, 4))
+    assert(wantA.nonEmpty && wantB.nonEmpty)
+    val path = CrashPoints.trapPath(spark, "dedupidx_crash", "idx")
+    CrashPoints.oneWriter(spark) {
+      DedupIndex.build(a, "doc_id", "text", path)
+      val points = CrashPoints.everyRename(
+          DedupIndex.build(b, "doc_id", "text", path)) {
+        val freshA = DedupIndex.isFresh(a, "doc_id", "text", path)
+        val freshB = DedupIndex.isFresh(b, "doc_id", "text", path)
+        assert(freshA != freshB, s"fresh on A: $freshA, on B: $freshB")
+        assert(pairSet(DedupIndex.pairs(spark, path)) == (if (freshA) wantA else wantB))
+        val ids = DedupIndex.signatures(spark, path).select("doc_id").as[Long].collect()
+        assert(ids.length == 80 && ids.forall(id => (id < 1000L) == freshA))
+        assert(CrashPoints.leftovers(spark, path).isEmpty,
+          CrashPoints.leftovers(spark, path))
+      }
+      println(s"DedupIndex rebuild: $points crash points covered")
+      assert(points > 2)
+      assert(DedupIndex.isFresh(b, "doc_id", "text", path))
+    }
+  }
+
+  test("a build whose publish a read rolled back throws; a re-run commits") {
+    val a = docs(31L, 40)
+    val b = docs(32L, 40, idOffset = 1000L)
+    val path = CrashPoints.trapPath(spark, "dedupidx_commit", "idx")
+    DedupIndex.build(a, "doc_id", "text", path)
+    TrapFs.after = (src, dst) =>
+      if (src.getName.endsWith("_graft_stage") && dst.getName == "idx") {
+        TrapFs.reset()
+        DedupIndex.pairs(spark, path)
+      }
+    val e = try intercept[IllegalStateException] {
+      DedupIndex.build(b, "doc_id", "text", path)
+    } finally TrapFs.reset()
+    assert(e.getMessage.contains("Re-run the rebuild"), e.getMessage)
+    assert(DedupIndex.isFresh(a, "doc_id", "text", path))
+    DedupIndex.build(b, "doc_id", "text", path)
+    assert(DedupIndex.isFresh(b, "doc_id", "text", path))
+    assert(pairSet(DedupIndex.pairs(spark, path)) ==
+      pairSet(Dedup.lshCandidatePairs(b, "doc_id", "text", 3, 16, 4)))
+    assert(CrashPoints.leftovers(spark, path).isEmpty)
+  }
 }

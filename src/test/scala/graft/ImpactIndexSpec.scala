@@ -217,4 +217,77 @@ class ImpactIndexSpec extends SparkSpec {
       topk(InvertedIndex.bm25Search(docs, "doc_id", "text",
         Seq("spark", "window"), 7)))
   }
+
+  // ---- publish (whole previous build or whole new one) -----------------
+
+  private def corpus(seed: Int, idOffset: Long): org.apache.spark.sql.DataFrame = {
+    val rnd = new Random(seed)
+    val vocab = Vector("spark", "window", "stream", "shuffle", "join",
+      "agg", "scan", "sort", "hash", "merge")
+    (0L until 120L).map { i =>
+      (i + idOffset,
+       Seq.fill(3 + rnd.nextInt(20))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    }.toDF("doc_id", "text")
+  }
+
+  private val crashTerms = Seq("spark", "merge", "scan")
+
+  /** The index at `path` is one whole build of `a` or of `b`: a search
+    * equals the exhaustive scorer over the corpus its postings hold, and
+    * the sidecar and stats are what those postings derive. */
+  private def assertWhole(path: String, a: org.apache.spark.sql.DataFrame,
+                          b: org.apache.spark.sql.DataFrame): Unit = {
+    val got = topk(ImpactIndex.search(spark, path, "doc_id", crashTerms, 10))
+    val posts = spark.read.parquet(s"$path/postings")
+    val ids = posts.select("doc_id").distinct().as[Long].collect()
+    assert(ids.length == 120 && (ids.forall(_ < 1000L) || ids.forall(_ >= 1000L)),
+      s"postings of both builds: ${ids.sorted.mkString(",")}")
+    val docs = if (ids.head < 1000L) a else b
+    assert(got == topk(InvertedIndex.bm25Search(docs, "doc_id", "text", crashTerms, 10)))
+    val sidecar = posts.groupBy(col("term"),
+        col("term_bucket").cast("long").as("term_bucket"),
+        col("doc_bucket").cast("long").as("doc_bucket"))
+      .agg(max("score").as("max_score"), count(lit(1)).as("n_docs"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    assert(rows(spark.read.parquet(s"$path/sidecar")) == rows(sidecar))
+    assert(rows(spark.read.parquet(s"$path/stats")) ==
+      rows(posts.agg(sum("tf").as("tot"), countDistinct(col("doc_id")).as("nd"))))
+    assert(CrashPoints.leftovers(spark, path).isEmpty,
+      CrashPoints.leftovers(spark, path))
+  }
+
+  test("a rebuild crashed at any rename leaves the whole old or the whole new index") {
+    val a = corpus(41, 0L)
+    val b = corpus(42, 1000L)
+    val path = CrashPoints.trapPath(spark, "impact_crash", "idx")
+    CrashPoints.oneWriter(spark) {
+      ImpactIndex.build(a, "doc_id", "text", path, 4, 2)
+      val points = CrashPoints.everyRename(
+        ImpactIndex.build(b, "doc_id", "text", path, 4, 2))(assertWhole(path, a, b))
+      println(s"ImpactIndex rebuild: $points crash points covered")
+      assert(points > 2)
+    }
+    assert(spark.read.parquet(s"$path/postings").filter(col("doc_id") < 1000L).isEmpty)
+  }
+
+  test("a build whose publish a search rolled back throws; a re-run commits") {
+    val a = corpus(43, 0L)
+    val b = corpus(44, 1000L)
+    val path = CrashPoints.trapPath(spark, "impact_commit", "idx")
+    ImpactIndex.build(a, "doc_id", "text", path, 4, 2)
+    TrapFs.after = (src, dst) =>
+      if (src.getName.endsWith("_graft_stage") && dst.getName == "idx") {
+        TrapFs.reset()
+        ImpactIndex.search(spark, path, "doc_id", crashTerms, 10)
+      }
+    val e = try intercept[IllegalStateException] {
+      ImpactIndex.build(b, "doc_id", "text", path, 4, 2)
+    } finally TrapFs.reset()
+    assert(e.getMessage.contains("Re-run the rebuild"), e.getMessage)
+    assertWhole(path, a, b)
+    assert(spark.read.parquet(s"$path/postings").filter(col("doc_id") >= 1000L).isEmpty)
+    ImpactIndex.build(b, "doc_id", "text", path, 4, 2)
+    assertWhole(path, a, b)
+    assert(spark.read.parquet(s"$path/postings").filter(col("doc_id") < 1000L).isEmpty)
+  }
 }

@@ -96,18 +96,25 @@ class ScaleOpsSpec extends SparkSpec {
     assert(spark.read.parquet(dir).collect().toSet == before)
     // idempotent: second pass is a no-op
     assert(Compaction.compact(spark, dir, 512L * 1024) == (nAfter, nAfter))
-    // crash recovery: simulate dying between the two swap renames
-    // (root moved aside, staged output half-present)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(dir + "_graft_precompact")
-    val stage = new org.apache.hadoop.fs.Path(dir + "_graft_compact")
-    assert(fs.rename(root, old))
-    fs.mkdirs(stage)
-    assert(!fs.exists(root))
-    Compaction.compact(spark, dir, 512L * 1024) // must restore first
-    assert(spark.read.parquet(dir).collect().toSet == before)
-    assert(!fs.exists(old) && !fs.exists(stage))
+    // crash recovery: die at each rename of a compaction (Spark's
+    // committer renames, then the publish's); the next compaction must
+    // restore the rows first and leave no staging or backup sibling
+    var crashDir = ""
+    def freshCrashDir(): Unit = {
+      crashDir = CrashPoints.trapPath(spark, "compact_crash", "t")
+      df.repartition(40).write.parquet(crashDir)
+    }
+    freshCrashDir()
+    val points = CrashPoints.everyRename(
+        Compaction.compact(spark, crashDir, 512L * 1024)) {
+      Compaction.compact(spark, crashDir, 512L * 1024) // must restore first
+      assert(spark.read.parquet(crashDir).collect().toSet == before)
+      assert(CrashPoints.leftovers(spark, crashDir).isEmpty,
+        CrashPoints.leftovers(spark, crashDir))
+      freshCrashDir()
+    }
+    println(s"Compaction: $points crash points covered")
+    assert(points > 2)
   }
 
   test("AQE splits a skewed join partition (skew-immune shuffle joins)") {
