@@ -111,11 +111,11 @@ private[graft] object QueryHelpers {
 
   /** The scratch path of index `prefix` of (session, sf dir), built by
     * `build` on first use (kept in `indexPaths` by (session, prefix, sf
-    * dir)), under one lock: TrieMap's getOrElseUpdate
-    * gives no at-most-once guarantee, and two builds of one path are two
-    * writers, which the stores' single-writer commit protocol refuses
-    * (one's recovery rolls the other back). The in-memory caches above
-    * stay lock-free (their worst case is duplicate work). */
+    * dir)), under one lock: TrieMap's getOrElseUpdate gives no
+    * at-most-once guarantee, and two builds of one path are two writers,
+    * which the stores' commit protocol does not allow (one's recovery
+    * rolls the other back). The in-memory caches above stay lock-free
+    * (their worst case is duplicate work). */
   private def builtOnce(s: SparkSession, dir: String, prefix: String)
       (build: String => Unit): String = {
     purgeAll()
