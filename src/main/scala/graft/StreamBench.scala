@@ -71,7 +71,7 @@ object StreamBench {
     def stage(df: DataFrame, orderCol: String, tag: String): String = {
       val dir = root.resolve(tag)
       java.nio.file.Files.createDirectories(dir)
-      val pinned = df.localCheckpoint(true)
+      val pinned = graft.operators.CheckpointScope.pin(df)
       val (mn, mx) = pinned.agg(min(orderCol), max(orderCol))
         .as[(Long, Long)].head()
       val width = (mx - mn) / chunks + 1

@@ -55,8 +55,7 @@ object Curation {
       .withColumn("_keep", min(col("doc_id")).over(wFp))
       .filter(col("doc_id") === col("_keep"))
       .select("doc_id", "text", "n_tokens")
-      .localCheckpoint()
-      .transform { d => graft.operators.CheckpointScope.register(d); d }
+      .transform(graft.operators.CheckpointScope.pin(_))
     // 4: near-dup clustering over LSH candidates; keep each
     // component's min id. Shared pairs restrict to the survivors
     // (per-doc signatures make the restriction exact — see scaladoc).

@@ -303,10 +303,10 @@ object Dedup {
     // table back onto 94.5M aggregated pairs — at 100 TB that side is
     // corpus-doc-sized, not broadcastable, and the two post-agg
     // sort-merge joins it forced were half the operator's sf10 cost
-    // one-shot pin (LoopCheckpoint.once): consumed by the two self-join
-    // sides only — never loop-carried, so it must not pay a reliable
-    // HDFS write of the corpus-scale rare-gram relation per invocation
-    val rare = graft.operators.LoopCheckpoint.once(
+    // one-shot pin: consumed by the two self-join sides only — never
+    // loop-carried, so it must not pay a reliable HDFS write of the
+    // corpus-scale rare-gram relation per invocation
+    val rare = graft.operators.CheckpointScope.pin(
       grams.withColumn("df", count(lit(1)).over(wg))
         .filter(col("df") <= maxDf)
         .withColumn("sz", count(lit(1)).over(wd))
@@ -345,7 +345,7 @@ object Dedup {
         TextAnalysis.shingles(col(textCol), n))).as("g"))
       .select(col("doc_id"), md5Hash60(col("g")).as("gh"))
     val wg = org.apache.spark.sql.expressions.Window.partitionBy("gh")
-    val rare = graft.operators.LoopCheckpoint.once(
+    val rare = graft.operators.CheckpointScope.pin(
       grams.withColumn("df", count(lit(1)).over(wg))
       .filter(col("df") <= maxDf)
       .select("doc_id", "gh"))

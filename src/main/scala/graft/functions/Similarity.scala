@@ -177,13 +177,11 @@ object Similarity {
         .mapGroups((b, it) => (b, it.toArray))
         // consumed twice below (streamed side + broadcast side) —
         // without this the corpus scan + packing shuffle run twice.
-        // Eager localCheckpoint, NOT persist(): cached blocks from a
-        // persist with no matching unpersist outlive the query (every
-        // bench pass leaked a copy for the session lifetime); a
-        // checkpoint's blocks are released by the ContextCleaner once
-        // the plan is unreachable.
-        .localCheckpoint(true)
-    graft.operators.CheckpointScope.register(packed)
+        // A pin, NOT persist(): cached blocks from a persist with no
+        // matching unpersist outlive the query (every bench pass leaked
+        // a copy for the session lifetime); a pin's blocks are released
+        // when the owning query's CheckpointScope ends.
+        .transform(graft.operators.CheckpointScope.pin(_))
     val tiles = packed.joinWith(broadcast(packed), lit(true), "cross")
     val candidates = tiles.flatMap { case ((_, xs), (_, ys)) =>
       val m = ys.length
@@ -344,10 +342,10 @@ object Similarity {
     * stay bounded (k ≈ n/1e5 in the paper's setting). */
   def semDedupKmeans(emb: DataFrame, k: Int, iters: Int,
                      threshold: Double): DataFrame = {
+    // consumed 3x: two pair sides + summary
     val assigned = kmeansModel(emb, k, iters)._1
       .select(col("vec_id"), col("embedding"), col("cid"))
-      .localCheckpoint(true) // consumed 3x: two pair sides + summary
-    graft.operators.CheckpointScope.register(assigned)
+      .transform(graft.operators.CheckpointScope.pin(_))
     semDedupFromAssigned(assigned, threshold)
   }
 
@@ -379,10 +377,10 @@ object Similarity {
       : (DataFrame, DataFrame) = {
     registerExpressions(emb.sparkSession)
     val q = quantizedEmbeddings(emb)
+    // scored once per iteration — don't re-quantize
     val withXx = q.select(col("vec_id"), col("embedding"),
         dotFused(col("embedding"), col("embedding")).as("xx"))
-      .localCheckpoint()  // scored once per iteration — don't re-quantize
-    graft.operators.CheckpointScope.register(withXx)
+      .transform(graft.operators.CheckpointScope.pin(_))
     def assign(cent: DataFrame): DataFrame =
       withXx.crossJoin(broadcast(cent.select(col("cid"), col("ce"),
           dotFused(col("ce"), col("ce")).as("cc"))))
@@ -549,7 +547,7 @@ object Similarity {
       // constraint in both routes (the kernel never evaluates a
       // cross-label pair, so neither may the cell path), and the cell
       // id bounds the within-label pair volume
-      val assigned = graft.operators.LoopCheckpoint.once(
+      val assigned = graft.operators.CheckpointScope.pin(
         kmeansModel(emb, k, iters)._1
           .select(col("vec_id"), col("embedding"), col("cid"))
           .join(emb.select(col("vec_id"), col("label")), "vec_id"))
@@ -597,12 +595,11 @@ object Similarity {
       .select(col("vec_id"), col("label"), col("embedding"))
       .as[(Long, String, Array[Double])]
     // Pack per (label, tile). Consumed twice (both self-join sides);
-    // eager localCheckpoint, not persist — see knnJoin.
+    // a pin, not persist — see knnJoin.
     val packed = guarded
       .groupByKey(r => (r._2, math.floorMod(r._1, tiles.toLong).toInt))
       .mapGroups((key, it) => (key._1, key._2, it.map(r => (r._1, r._3)).toArray))
-      .localCheckpoint(true)
-    graft.operators.CheckpointScope.register(packed)
+      .transform(graft.operators.CheckpointScope.pin(_))
     // Unordered tile pairs within a label: (ta, tb) with ta ≤ tb — each
     // unordered VECTOR pair lands in exactly one tile-pair task.
     val tilePairs = packed.as("x").joinWith(packed.as("y"),

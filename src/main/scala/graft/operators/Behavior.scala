@@ -25,11 +25,11 @@ object Funnel {
     * the whole chain reuses ONE hash partitioning — Catalyst plans a
     * single exchange on the events side per step filter, and the
     * per-user frames are tiny (≤ one row per user) broadcast-or-local
-    * joins thereafter. No windows, no sorts.
+    * joins thereafter. No windows, no sorts. Each frame is pinned
+    * ([[CheckpointScope.pin]]) before the next step builds on it.
     */
   def stepFrames(events: DataFrame, userCol: String, typeCol: String,
-                 tsCol: String, steps: Seq[String],
-                 materialize: Boolean = false): Seq[DataFrame] = {
+                 tsCol: String, steps: Seq[String]): Seq[DataFrame] = {
     require(steps.nonEmpty, "funnel needs at least one step")
     steps.zipWithIndex.foldLeft(Vector.empty[DataFrame]) {
       case (acc, (step, i)) =>
@@ -48,11 +48,11 @@ object Funnel {
               .groupBy(col(userCol))
               .agg(aggs.head, aggs.tail: _*)
           }
-        // materialize INSIDE the fold so frame i+1 builds on the
-        // materialized rows — otherwise each frame's lineage re-embeds
-        // the whole prefix chain and the event source is rescanned
-        // O(steps²) times across the chain + report branches
-        acc :+ (if (materialize) frame.localCheckpoint() else frame)
+        // pin INSIDE the fold so frame i+1 builds on the materialized
+        // rows — otherwise each frame's lineage re-embeds the whole
+        // prefix chain and the event source is rescanned O(steps²)
+        // times across the chain + report branches
+        acc :+ CheckpointScope.pin(frame)
     }
   }
 
@@ -61,18 +61,16 @@ object Funnel {
     * timestamp column's own unit — integer-exact when `tsCol` is an
     * epoch integer).
     *
-    * Each step frame (≤ one row per user) is materialized with
-    * `localCheckpoint` before the report union: every union branch
-    * embeds its whole step-prefix chain, and AQE's exchange reuse does
-    * NOT collapse the re-analyzed copies (plan-spec-verified), so the
-    * lazy form would rescan the event source O(steps²) times — with
-    * the checkpoint it is scanned once per step, and each branch reads
-    * the materialized per-user rows. `materialize = false` keeps the
-    * fully-lazy single-DAG form for callers that aggregate one step. */
+    * Each step frame (≤ one row per user) is pinned
+    * ([[CheckpointScope.pin]], released with the owning query) before
+    * the report union: every union branch embeds its whole step-prefix
+    * chain, and AQE's exchange reuse does NOT collapse the re-analyzed
+    * copies (plan-spec-verified), so the lazy form would rescan the
+    * event source O(steps²) times — pinned, it is scanned once per
+    * step, and each branch reads the materialized per-user rows. */
   def funnel(events: DataFrame, userCol: String, typeCol: String,
-             tsCol: String, steps: Seq[String],
-             materialize: Boolean = true): DataFrame = {
-    val frames = stepFrames(events, userCol, typeCol, tsCol, steps, materialize)
+             tsCol: String, steps: Seq[String]): DataFrame = {
+    val frames = stepFrames(events, userCol, typeCol, tsCol, steps)
     frames.zipWithIndex.map {
       case (f, i) =>
         f.select((col(s"t${i + 1}") - col("t1")).as("lag"))

@@ -42,12 +42,11 @@ object Bfs {
     // reuses one layout
     val sym = canon.union(canon.select(col("v"), col("u")))
       .repartition(col("u"))
-      .localCheckpoint(eager = true)
-    CheckpointScope.register(sym) // released with the owning query
+      .transform(CheckpointScope.pin(_))
 
     var dist = sources.toDF("node").distinct()
       .select(col("node"), lit(0).as("dist"))
-      .localCheckpoint(eager = true)
+      .transform(CheckpointScope.pin(_))
     var frontier = dist
     var h = 1
     while (h <= maxHops && !frontier.isEmpty) {
@@ -81,11 +80,10 @@ object Bfs {
     val sym = e.union(e.select(col("v"), col("u"), col("cost")))
       .groupBy("u", "v").agg(min("cost").as("cost"))
       .repartition(col("u"))
-      .localCheckpoint(eager = true)
-    CheckpointScope.register(sym) // released with the owning query
+      .transform(CheckpointScope.pin(_))
     var dist = sources.toDF("node").distinct()
       .select(col("node"), lit(0L).as("cost"))
-      .localCheckpoint(eager = true)
+      .transform(CheckpointScope.pin(_))
     // rolling: unlike boundedDistances (whose result unions EVERY
     // round's frontier), each relaxation round fully replaces the
     // previous cost table — round r is dead once r+1's cut lands

@@ -22,17 +22,22 @@ import org.apache.spark.sql.{Dataset, GraftSqlBridge}
   * minus the ones the session-level caches explicitly retain — is
   * released the moment the query's results are consumed.
   *
-  * Three pieces:
-  *   - [[scoped]] — wraps one query (build + consume); checkpoints
-  *     created inside (registered by [[LoopCheckpoint]]) are released
-  *     when the body returns.
+  * The lifecycle, one entry per way a checkpoint is made or freed:
+  *   - [[pin]] — the only ONE-SHOT pin: an eager `localCheckpoint`
+  *     (carried stats kept) of a frame built once and read by several
+  *     consumers of the same query; registered with the enclosing
+  *     scope.
+  *   - [[LoopCheckpoint]] — the only LOOP cut: carried stats dropped,
+  *     reliable storage when `spark.graft.checkpoint.reliable` is set;
+  *     registered like a pin. [[LoopCheckpoint.Rolling]] frees round
+  *     r the moment round r+1 lands, through [[release]], even inside
+  *     a retained build (a cached artifact needs its FINAL round only).
   *   - [[retained]] — marks a region (the QueryHelpers session-cache
   *     builders) whose checkpoints outlive the creating query: they
   *     are NOT registered with the enclosing scope.
-  *   - [[release]] — drop one frame's checkpoint blocks now; used by
-  *     [[LoopCheckpoint.Rolling]] for dead loop rounds, which are
-  *     released even inside a retained build (a cached artifact needs
-  *     its FINAL round, never rounds 1..n−1).
+  *   - [[scoped]] — wraps one query (build + consume); every
+  *     checkpoint registered inside is released when the body returns
+  *     or throws.
   *
   * Thread-local by design: plan construction and the consuming action
   * run on the harness thread (`graft.Suite.guarded`); Spark's
@@ -47,8 +52,9 @@ object CheckpointScope {
     override def initialValue(): Integer = 0
   }
 
-  /** Called by [[LoopCheckpoint]] on every checkpoint it creates. */
-  private[graft] def register(ds: Dataset[_]): Unit = {
+  /** Called by [[pin]] and [[LoopCheckpoint]] on every checkpoint they
+    * create. */
+  private[operators] def register(ds: Dataset[_]): Unit = {
     val buf = frames.get()
     if (buf != null && retainDepth.get() == 0) buf.add(ds)
   }
@@ -77,12 +83,15 @@ object CheckpointScope {
     }
   }
 
-  /** Eager pin + scope registration for ONE-SHOT frames that
-    * intentionally KEEP their carried origin stats (unlike
-    * [[LoopCheckpoint]], which drops them — loop frames compound
-    * them): behaviorally identical to `.localCheckpoint(true)`, plus
-    * release at the owning query's end. Usable mid-chain via
-    * `.transform(CheckpointScope.pin)`. */
+  /** Eager pin + scope registration for ONE-SHOT frames: a relation
+    * built once and consumed by a few sibling branches of the SAME
+    * query. Behaviorally identical to `.localCheckpoint(true)`, plus
+    * release at the owning query's end. Keeps the carried origin stats
+    * (only loop-carried frames compound them — [[LoopCheckpoint]]), and
+    * ignores `spark.graft.checkpoint.reliable`: a one-shot pin's worst
+    * case on executor loss is recomputing its own subtree once, not
+    * worth a reliable write of a corpus-scale relation per query.
+    * Usable mid-chain via `.transform(CheckpointScope.pin)`. */
   def pin[T](ds: Dataset[T]): Dataset[T] = {
     val p = ds.localCheckpoint(true)
     register(p)

@@ -381,14 +381,18 @@ object GlobalOrder {
     val specs = sortSpecs(df, sortCols)
     if (!specs.forall(s => comparable(s.dt))) {
       // pinned plan: the SQL range exchange re-samples split points
-      // per execution, so the frame must be materialized for its two
-      // consumers to agree on pids
+      // per execution, so the frame must be materialized (a
+      // LoopCheckpoint cut, stats dropped) for its two consumers to
+      // agree on pids
       val s = LoopCheckpoint(
         df.repartitionByRange(p, sortCols: _*)
           .withColumn(PID, spark_partition_id()))
       Ranged(s, s, PID)
     } else {
-      val src = if (reEvalCheap(df)) df else LoopCheckpoint.once(df)
+      // a derived input is pinned once (one-shot, released with the
+      // query) so the sample, the shuffle feed and the offsets read one
+      // evaluation; a cheap leaf-rooted input is re-read as is
+      val src = if (reEvalCheap(df)) df else CheckpointScope.pin(df)
       val bounds = sampleBounds(src, specs, p)
       val slots = placeSlots(bounds.length + 1, p)
       val tagged = src

@@ -43,8 +43,7 @@ object KCore {
     val canon = e.select(least(col("u"), col("v")).as("u"),
                          greatest(col("u"), col("v")).as("v")).distinct()
     val sym = canon.union(canon.select(col("v"), col("u")))
-      .localCheckpoint(eager = true)
-    CheckpointScope.register(sym) // released with the owning query
+      .transform(CheckpointScope.pin(_))
     def induced(alive: Option[DataFrame]): DataFrame =
       alive.fold(sym)(a =>
         sym.join(a, Seq("u"), "left_semi")

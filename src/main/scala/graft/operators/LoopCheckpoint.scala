@@ -13,7 +13,8 @@ import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
   * ~10 rounds the driver hangs multiplying million-bit BigIntegers
   * inside stats estimation (observed on the sf1 sweep:
   * ConnectedComponents pinned in BigInteger.multiply for 30+ minutes).
-  * One-shot checkpoints are immune — only loop-carried ones compound.
+  * One-shot checkpoints are immune — only loop-carried ones compound;
+  * they go through [[CheckpointScope.pin]].
   *
   * This wrapper drops the carried stats (keeping the checkpointed RDD,
   * partitioning, and ordering — zero data movement), so every round
@@ -65,23 +66,6 @@ private[graft] object LoopCheckpoint {
         try p.checkpoint(true) finally p.unpersist(false)
       }
     val out = GraftSqlBridge.dropCarriedStats(pinned)
-    CheckpointScope.register(out)
-    out
-  }
-
-  /** Pin for ONE-SHOT frames (a relation built once and consumed by a
-    * few sibling branches of the SAME query): always the eager
-    * `localCheckpoint`, regardless of `spark.graft.checkpoint.reliable`.
-    * The reliable knob exists for LOOP-CARRIED frames, where a lost
-    * executor mid-loop invalidates hours of rounds; a one-shot pin's
-    * worst case on executor loss is recomputing its own subtree once —
-    * not worth a full HDFS write of a corpus-scale relation per
-    * invocation, and a reliable=true cluster without a checkpoint dir
-    * must not throw on a query that never loops. Stats are dropped the
-    * same way (a one-shot pin can still feed a join tree whose
-    * estimate the carried origin stats would distort). */
-  def once(df: DataFrame): DataFrame = {
-    val out = GraftSqlBridge.dropCarriedStats(df.localCheckpoint(true))
     CheckpointScope.register(out)
     out
   }

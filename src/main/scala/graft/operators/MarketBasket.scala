@@ -41,8 +41,7 @@ object MarketBasket {
     // three consumers (basket count, item counts, pair counts) read
     // the materialized sets, not the source
     val sets = CoOccurrence.sets(items, basketCol, itemCol)
-      .localCheckpoint(eager = true)
-    CheckpointScope.register(sets) // released with the owning query
+      .transform(CheckpointScope.pin(_))
     val totals = sets.agg(count(lit(1)).as("n_baskets"))
     val itemCnt = sets.select(explode(col("items")).as("item"))
       .groupBy("item").agg(count(lit(1)).as("item_cnt"))

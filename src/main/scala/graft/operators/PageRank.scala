@@ -32,10 +32,10 @@ object PageRank {
     // pre-partitioned (u, v, outdeg) table instead of re-aggregating
     // and re-joining the degree table every round
     val e = e0.join(deg, "u")
-      .repartition(col("u")).localCheckpoint()
+      .repartition(col("u")).transform(CheckpointScope.pin(_))
     val nodes = e.select(col("u").as("node"))
       .union(e.select(col("v").as("node"))).distinct()
-      .localCheckpoint()
+      .transform(CheckpointScope.pin(_))
     var pr = nodes.withColumn("pr", lit(1000000L))
     val roll = new LoopCheckpoint.Rolling // round r dead once r+1 lands
     for (_ <- 1 to iters) {

@@ -15,7 +15,7 @@ import graft.Tables
   * 3-month spine, 7-day lookback.
   */
 object EventsAdapter {
-  // localCheckpoint: this DERIVED dimension (distinct over the event
+  // pinned: this DERIVED dimension (distinct over the event
   // stream) is consumed three times by the pipeline (admits join,
   // scaffold universe, fan-out join); without materialization each
   // consumer would re-scan and re-aggregate the full events table —
@@ -25,7 +25,7 @@ object EventsAdapter {
     Tables.events(spark, sfDir)
       .select(col("user_id").as("person_id")).distinct()
       .withColumn("household_id", expr("person_id div 2"))
-      .localCheckpoint()
+      .transform(graft.operators.CheckpointScope.pin(_))
 
   def encounters(spark: SparkSession, sfDir: String): DataFrame =
     Tables.events(spark, sfDir)

@@ -37,7 +37,11 @@ object RetentionJob {
       scala.util.Properties.envOrElse("SPARK_PROCESS_BATCH_SIZE", "10000").toInt)
 
   /** Programmatic body (testable without a JVM fork). Returns the
-    * number of persons with history in the sink after the run. */
+    * number of persons THIS run wrote to the sink, not the sink's
+    * total. The star person source carries no history column, so every
+    * person is pending on every run: a re-run over the same sink
+    * rewrites (and counts) each person again, leaving the sink's rows
+    * as they were. */
   def run(spark: SparkSession, job: JobConfig): Long = {
     val persons =
       if (job.clientCode == "ALL") StarAdapter.persons(spark, job.dataDir)

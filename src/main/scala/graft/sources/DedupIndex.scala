@@ -116,7 +116,7 @@ object DedupIndex {
       s"pairsWithDelta: delta holds multiple rows for one $idCol — " +
         "collapse re-deliveries to the newest row per id before calling")
     val m = manifest(spark, path).select("n", "k", "bands").head()
-    val deltaSigs = graft.operators.LoopCheckpoint.once(
+    val deltaSigs = graft.operators.CheckpointScope.pin(
       graft.functions.Dedup.docBandSignatures(
         delta, idCol, textCol, m.getInt(0), m.getInt(1), m.getInt(2)))
     val deltaIds = deltaSigs.select(col("doc_id")).distinct()

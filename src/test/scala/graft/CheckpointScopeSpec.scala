@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -14,7 +18,9 @@ import graft.operators.{CheckpointScope, LoopCheckpoint}
   *   - [[CheckpointScope.retained]] exempts session-cache builds, and
   *     the retained frame stays consumable after the scope closes;
   *   - [[LoopCheckpoint.Rolling]] frees round r the moment round r+1
-  *     lands, keeping only the final round.
+  *     lands, keeping only the final round;
+  *   - [[CheckpointScope.pin]] and [[LoopCheckpoint]] are the only
+  *     checkpoint calls in the library, so every pin is registered.
   */
 class CheckpointScopeSpec extends SparkSpec {
   import spark.implicits._
@@ -43,7 +49,7 @@ class CheckpointScopeSpec extends SparkSpec {
     var pinned: DataFrame = null
     intercept[RuntimeException] {
       CheckpointScope.scoped {
-        pinned = LoopCheckpoint.once(base)
+        pinned = CheckpointScope.pin(base)
         sys.error("boom")
       }
     }
@@ -79,6 +85,21 @@ class CheckpointScopeSpec extends SparkSpec {
         "the final round is the loop's result — it must stay")
       assert(cur.count() == 256L)
     }
+  }
+
+  test("only CheckpointScope and LoopCheckpoint checkpoint in src/main/scala") {
+    val owners = Set("CheckpointScope.scala", "LoopCheckpoint.scala")
+    val call = """\.(?:localCheckpoint|checkpoint)\s*\(""".r
+    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty, "run from the repository root")
+    val strays = for {
+      f <- files if !owners(f.getFileName.toString)
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if call.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}"
+    assert(strays.isEmpty,
+      s"checkpoint outside CheckpointScope.pin / LoopCheckpoint: $strays")
   }
 
   test("no active scope: checkpoints behave as before (alive, GC-bound)") {
